@@ -35,7 +35,10 @@ def _sf_from_dir(path: str) -> float:
     return float(m.group(1)) if m else -1.0
 
 
-def main() -> None:
+def warm_session():
+    """The benchmark SparkSession, warmed up so that the first timed key
+    is not charged for session spin-up (also used by
+    tools/measure_key.py, so its numbers compare with bench anchors)."""
     from pyspark.sql import SparkSession
 
     import engine
@@ -87,6 +90,13 @@ def main() -> None:
     spark.range(32).select(_warm("id")).write.format("noop").mode(
         "overwrite"
     ).save()
+    return spark
+
+
+def main() -> None:
+    import engine
+
+    spark = warm_session()
 
     # Many keys persist() diamond relations (MinHash shingles, CC edge
     # list, rollup diamonds...).  Evict right after each so leaked

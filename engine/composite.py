@@ -1067,12 +1067,9 @@ def pipeline_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = corpus.select("vec_id").select(
         F.col("vec_id").alias("doc_id"), F.col("vec_id").alias("label")
     )
-    from engine.core import scoped_shuffle_partitions
-
-    # probe_from=0: the ≥0.999 gate admits only planted pairs (max
-    # organic cosine ≈ 0.5) — star components converge in round 1.
-    with scoped_shuffle_partitions(spark, 8):
-        labels = _cc_propagate(both, labels, probe_from=0)
+    # Probed from round 1: the ≥0.999 gate admits only planted pairs
+    # (max organic cosine ≈ 0.5) — star components converge in round 1.
+    labels = _cc_propagate(spark, both, labels)
     size = F.count("*").over(Window.partitionBy("label"))
     return labels.select(
         F.col("doc_id").alias("vec_id"),
@@ -1228,7 +1225,6 @@ def pipeline_embedding_dedup_polyhash(
     import numpy as np
     import pandas as pd
 
-    from engine.core import scoped_shuffle_partitions
     from engine.dedup import _cc_propagate
 
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -1317,11 +1313,10 @@ def pipeline_embedding_dedup_polyhash(
     labels = corpus.select(
         F.col("vec_id").alias("doc_id"), F.col("vec_id").alias("label")
     )
-    # probe_from=0: components here are stars/3-chains around an
+    # Probed from round 1: components here are stars/3-chains around an
     # original (diameter ≤ 2) — the fixpoint lands in round 1, so probe
-    # every round instead of burning the text graph's 2 warmup rounds.
-    with scoped_shuffle_partitions(spark, 8):
-        labels = _cc_propagate(both, labels, probe_from=0)
+    # every round instead of skipping the text graph's warmup rounds.
+    labels = _cc_propagate(spark, both, labels)
     size = F.count("*").over(Window.partitionBy("label"))
     return labels.select(
         F.col("doc_id").alias("vec_id"),

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.core import query
+from engine.core import fixpoint, query
 from engine.io import load
 
 
@@ -764,31 +764,26 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = e.filter(F.col("vec_id") < _IVF_K).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("c_emb")
     )
-    # Eager checkpoints inside the scoped block: the Lloyd stages (tiny
-    # 16×64 reduces) run NOW at 8 shuffle partitions and their lineage
-    # is truncated; the final search plan below executes later under
-    # the caller's conf.  Lazy checkpoints would defer every Lloyd
-    # stage into the final action — replayed at 32 partitions.
-    from engine.core import scoped_shuffle_partitions
 
-    with scoped_shuffle_partitions(spark, 8):
-        for _ in range(_IVF_ITERS):
-            assigned = nearest(e, cents, "cid")
-            cents = (
-                assigned.select(
-                    "cid", F.posexplode("embedding").alias("pos", "comp")
-                )
-                .groupBy("cid", "pos")
-                .agg(F.avg(F.col("comp").cast("double")).alias("m"))
-                .groupBy("cid")
-                .agg(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                        lambda s: s["m"].cast("float"),
-                    ).alias("c_emb")
-                )
-                .localCheckpoint(eager=True)
+    def lloyd(cents: DataFrame) -> DataFrame:
+        return (
+            nearest(e, cents, "cid")
+            .select("cid", F.posexplode("embedding").alias("pos", "comp"))
+            .groupBy("cid", "pos")
+            .agg(F.avg(F.col("comp").cast("double")).alias("m"))
+            .groupBy("cid")
+            .agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
+                    lambda s: s["m"].cast("float"),
+                ).alias("c_emb")
             )
+        )
+
+    # The Lloyd stages (tiny 16×64 reduces) run NOW on the fixpoint
+    # driver; the final search plan below executes later under the
+    # caller's conf.
+    cents = fixpoint(spark, cents, lloyd, cap=_IVF_ITERS, what="IVF Lloyd")
 
     inverted = nearest(e, cents, "cid").select(
         F.col("vec_id").alias("neighbor_id"),
@@ -1106,42 +1101,41 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    from engine.core import scoped_shuffle_partitions
+    # the (vec, subspace, component) explosion is codebook-independent
+    # — materialize once, reuse across Lloyd passes (bench clears it)
+    sub_all = sub_of(e).persist()
 
-    with scoped_shuffle_partitions(spark, 8):
-        cb = cb.localCheckpoint(eager=True)
-        # the (vec, subspace, component) explosion is codebook-independent
-        # — materialize once, reuse across Lloyd passes (bench clears it)
-        sub_all = sub_of(e).persist()
-        for _ in range(_PQ_LLOYD):
-            coded = e.select(
-                "vec_id", _encode_udf(_cb_array(cb))("embedding").alias("codes")
+    def lloyd(cb: DataFrame) -> DataFrame:
+        coded = e.select(
+            "vec_id", _encode_udf(_cb_array(cb))("embedding").alias("codes")
+        )
+        means = (
+            sub_all
+            .join(coded, "vec_id")
+            .select(
+                "m",
+                "p",
+                "comp",
+                F.element_at("codes", F.col("m") + 1).alias("k"),
             )
-            means = (
-                sub_all
-                .join(coded, "vec_id")
-                .select(
-                    "m",
-                    "p",
-                    "comp",
-                    F.element_at("codes", F.col("m") + 1).alias("k"),
-                )
-                .groupBy("m", "k", "p")
-                .agg(F.avg("comp").alias("mc"))
-                .groupBy("m", "k")
-                .agg(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("p", "mc"))),
-                        lambda s: s["mc"],
-                    ).alias("sv_new")
-                )
+            .groupBy("m", "k", "p")
+            .agg(F.avg("comp").alias("mc"))
+            .groupBy("m", "k")
+            .agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("p", "mc"))),
+                    lambda s: s["mc"],
+                ).alias("sv_new")
             )
-            # empty clusters keep their previous codeword
-            cb = (
-                cb.join(means, ["m", "k"], "left")
-                .select("m", "k", F.coalesce("sv_new", "sv").alias("sv"))
-                .localCheckpoint(eager=True)
-            )
+        )
+        # empty clusters keep their previous codeword
+        return cb.join(means, ["m", "k"], "left").select(
+            "m", "k", F.coalesce("sv_new", "sv").alias("sv")
+        )
+
+    cb = fixpoint(
+        spark, cb, lloyd, cap=_PQ_LLOYD, what="PQ Lloyd", checkpoint_start=True
+    )
 
     Cfin = _cb_array(cb)
     coded = e.select(
@@ -2086,8 +2080,8 @@ def graph_pagerank_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     out-degree) persists once and is re-read by all three iterations
     — exactly the RDD-era `links.cache()` idiom, DataFrame-native.
     Bounded iterations = bounded plan depth; a convergence-driven
-    variant would wrap this step in the dedup_connected_components
-    loop harness (localCheckpoint per round, loud non-convergence)."""
+    variant would run this step on the engine.core.fixpoint driver
+    (localCheckpoint per round, loud non-convergence)."""
     edges = _cos_block_edges(spark, sf_dir)
     und = edges.select(
         F.col("src").alias("u"), F.col("dst").alias("v")
@@ -2152,13 +2146,11 @@ def graph_reachability_roots(spark: SparkSession, sf_dir: str) -> DataFrame:
     Convergence: ptr is monotone non-increasing (parents have strictly
     smaller ids), so equal consecutive ptr-sums ⇔ every pointer reached
     its root — the same tiny-aggregate probe as the CC kernel
-    (dedup_connected_components), localCheckpoint per round for lineage
-    truncation, loud failure at the cap.
+    (dedup_connected_components), on the engine.core.fixpoint driver
+    (per-round checkpoints, loud failure at the cap).
 
     Output: (doc_id, root_id, depth) — one row per document, exact, so
     the recursive-CTE oracle hash-proves the unrolled plan."""
-    from engine.core import scoped_shuffle_partitions
-
     d = load(spark, sf_dir, "documents").select("doc_id")
     # The pointer-doubling join (state ⋈ state on ptr = node) requires
     # every ancestor id to EXIST as a node row; the recursive-CTE
@@ -2196,34 +2188,31 @@ def graph_reachability_roots(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("dist"),
     )
-    with scoped_shuffle_partitions(spark, 8):
-        state = state.localCheckpoint(eager=True)
-        prev_sum = None
-        for it in range(_REACH_MAX_ITERS):
-            p = state.select(
-                F.col("node").alias("p_node"),
-                F.col("ptr").alias("p_ptr"),
-                F.col("dist").alias("p_dist"),
-            )
-            state = (
-                state.join(p, state.ptr == p.p_node)
-                .select(
-                    "node",
-                    F.col("p_ptr").alias("ptr"),
-                    (F.col("dist") + F.col("p_dist")).alias("dist"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            cur_sum = state.agg(F.sum("ptr")).first()[0]
-            if cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
-        else:
-            raise RuntimeError(
-                "reachability did not converge within "
-                f"{_REACH_MAX_ITERS} doubling rounds (depth > "
-                f"{2 ** _REACH_MAX_ITERS}) — raise _REACH_MAX_ITERS"
-            )
+
+    def double(state: DataFrame) -> DataFrame:
+        p = state.select(
+            F.col("node").alias("p_node"),
+            F.col("ptr").alias("p_ptr"),
+            F.col("dist").alias("p_dist"),
+        )
+        return state.join(p, state.ptr == p.p_node).select(
+            "node",
+            F.col("p_ptr").alias("ptr"),
+            (F.col("dist") + F.col("p_dist")).alias("dist"),
+        )
+
+    state = fixpoint(
+        spark,
+        state,
+        double,
+        cap=_REACH_MAX_ITERS,
+        what=(
+            "reachability pointer doubling (depth > 2**_REACH_MAX_ITERS: "
+            "raise _REACH_MAX_ITERS)"
+        ),
+        probe=F.sum("ptr"),
+        checkpoint_start=True,
+    )
     return state.select(
         F.col("node").alias("doc_id"),
         F.col("ptr").alias("root_id"),
@@ -3782,50 +3771,41 @@ def graph_kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each round is one degree aggregate (map-side combined,
     edge-proportional exchange) + two semi-joins against the surviving
     node set — the Pregel message shape, O(E) per round, O(peel
-    depth) rounds; rounds run under 8 shuffle partitions
-    (driver-orchestrated tiny reduces) with eager per-round
-    checkpoints truncating the lineage, the CC/IVF loop discipline."""
-    from engine.core import scoped_shuffle_partitions
+    depth) rounds, on the engine.core.fixpoint driver."""
 
-    edges = _cos_block_edges(spark, sf_dir)
-    with scoped_shuffle_partitions(spark, 8):
-        E = edges.localCheckpoint(eager=True)
-        n_edges = E.count()
-        for _ in range(_KCORE_UNROLL):
-            deg = (
-                E.select(F.col("src").alias("node"))
-                .unionAll(E.select(F.col("dst").alias("node")))
-                .groupBy("node")
-                .agg(F.count("*").alias("deg"))
-            )
-            keep = deg.filter(F.col("deg") >= _KCORE_K).select("node")
-            E = (
-                E.join(keep, E.src == keep.node, "left_semi")
-                .join(keep, F.col("dst") == keep.node, "left_semi")
-                .localCheckpoint(eager=True)
-            )
-            n_new = E.count()
-            if n_new == n_edges:
-                break
-            n_edges = n_new
-        else:
-            raise RuntimeError(
-                f"k-core peeling did not converge within {_KCORE_UNROLL} "
-                "rounds — the unrolled oracle would diverge; raise "
-                "_KCORE_UNROLL (and re-measure the margin) instead of "
-                "serving a non-converged core"
-            )
-        # Final degree aggregate EXECUTES INSIDE the scope (eager
-        # checkpoint): a lazily returned frame would run this tiny
-        # reduce after the conf restores, at 32 partitions — the
-        # documented scoped-conf trap.
+    def degree(E: DataFrame, name: str) -> DataFrame:
         return (
             E.select(F.col("src").alias("node"))
             .unionAll(E.select(F.col("dst").alias("node")))
             .groupBy("node")
-            .agg(F.count("*").alias("core_deg"))
-            .localCheckpoint(eager=True)
+            .agg(F.count("*").alias(name))
         )
+
+    def peel(E: DataFrame) -> DataFrame:
+        keep = degree(E, "deg").filter(F.col("deg") >= _KCORE_K).select("node")
+        return E.join(keep, E.src == keep.node, "left_semi").join(
+            keep, F.col("dst") == keep.node, "left_semi"
+        )
+
+    # The start edge count is probed too (probe_from=0): an input that
+    # is already a 3-core stops after one round.  The final degree
+    # aggregate runs inside the driver (finish): a lazily returned
+    # frame would run that tiny reduce after the conf restores, at the
+    # caller's width — the scoped-conf trap.
+    return fixpoint(
+        spark,
+        _cos_block_edges(spark, sf_dir),
+        peel,
+        cap=_KCORE_UNROLL,
+        what=(
+            "k-core peeling (the unrolled oracle would diverge: raise "
+            "_KCORE_UNROLL and re-measure the margin)"
+        ),
+        probe=F.count("*"),
+        probe_from=0,
+        checkpoint_start=True,
+        finish=lambda E: degree(E, "core_deg"),
+    )
 
 
 # -- ANN recall evaluation (r14 breadth: index-quality eval harness) --------

@@ -1077,7 +1077,7 @@ def stream_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             if p is not None and p["batchId"] >= 3:
                 break
             if time.time() >= deadline:
-                # Loud failure (same convention as _cc_propagate): a
+                # Loud failure (same convention as engine.core.fixpoint): a
                 # silent partial complete-mode sink would surface as a
                 # confusing driver hash mismatch instead of an error.
                 q.stop()

@@ -2190,3 +2190,83 @@ def test_pca_projection_energy_identities(spark):
     assert sum(r.n2 for r in pr_rows) == r0.trace
     assert all(r.p_den == r0.ray_den for r in pr_rows)
     assert all(0 <= r.ev_bp <= 10000 for r in pr_rows)
+
+
+# -- engine.core.fixpoint: the shared driver loop of the iterative keys -----
+_WIDTH = "spark.sql.shuffle.partitions"
+
+
+@pytest.fixture
+def other_width_session(spark):
+    # The fixture session already runs at the driver's width (8); set
+    # another width so that "rounds ran at 8" and "the caller's width is
+    # back" are distinguishable.
+    prev = spark.conf.get(_WIDTH)
+    spark.conf.set(_WIDTH, "5")
+    yield spark
+    spark.conf.set(_WIDTH, prev)
+
+
+def _counting(spark, fn, widths):
+    def step(df):
+        widths.append(spark.conf.get(_WIDTH))
+        return fn(df)
+
+    return step
+
+
+def test_fixpoint_raises_at_cap_naming_the_loop(other_width_session):
+    from engine.core import fixpoint
+
+    spark, widths = other_width_session, []
+    grow = _counting(spark, lambda df: df.select((F.col("id") + 1).alias("id")), widths)
+    with pytest.raises(RuntimeError, match="toy counter did not converge within 3 rounds"):
+        fixpoint(spark, spark.range(4), grow, cap=3, what="toy counter", probe=F.sum("id"))
+    assert widths == ["8"] * 3
+    assert spark.conf.get(_WIDTH) == "5"
+
+
+def test_fixpoint_without_probe_runs_exactly_cap_rounds(other_width_session):
+    from engine.core import fixpoint
+
+    spark, widths, finished = other_width_session, [], []
+
+    def finish(df):
+        finished.append(spark.conf.get(_WIDTH))
+        return df.groupBy().agg(F.sum("id").alias("s"))
+
+    step = _counting(spark, lambda df: df.select((F.col("id") + 1).alias("id")), widths)
+    out = fixpoint(spark, spark.range(3), step, cap=4, what="toy", finish=finish)
+    assert widths == ["8"] * 4 and finished == ["8"]
+    assert out.first().s == (4 + 5 + 6)
+    assert spark.conf.get(_WIDTH) == "5"
+
+
+@pytest.mark.parametrize("probe_from, rounds", [(0, 1), (1, 2), (3, 4)])
+def test_fixpoint_probe_from_skips_first_probes(other_width_session, probe_from, rounds):
+    # An identity step is converged from the start: the loop stops at
+    # the first round whose state and the state before it are both
+    # probed (state 0 is the start state).
+    from engine.core import fixpoint
+
+    spark, widths = other_width_session, []
+    same = _counting(spark, lambda df: df.select("id"), widths)
+    fixpoint(spark, spark.range(3), same, cap=8, what="toy",
+             probe=F.sum("id"), probe_from=probe_from)
+    assert len(widths) == rounds
+    assert spark.conf.get(_WIDTH) == "5"
+
+
+def test_fixpoint_monotone_step_converges_to_fixpoint(other_width_session):
+    # greatest(id - 1, 0) is monotone: sums 3, 1, 0, 0 over range(3) —
+    # converged after round 3, with every value at the fixpoint 0.
+    from engine.core import fixpoint
+
+    spark, widths = other_width_session, []
+    dec = _counting(
+        spark, lambda df: df.select(F.greatest(F.col("id") - 1, F.lit(0)).alias("id")), widths
+    )
+    out = fixpoint(spark, spark.range(3), dec, cap=8, what="toy",
+                   probe=F.sum("id"), checkpoint_start=True)
+    assert len(widths) == 3
+    assert sorted(r.id for r in out.collect()) == [0, 0, 0]

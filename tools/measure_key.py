@@ -3,8 +3,8 @@
 
 Usage: python tools/measure_key.py key1 [key2 ...] [--runs 3] [--plan DIR]
 
-One default-shaped session (same confs as bench.py), each key run
---runs times through the noop sink; prints per-run seconds and the
+One session from bench.warm_session (bench.py's confs and warm-ups),
+each key run --runs times through the noop sink; prints per-run seconds and the
 min of runs 1.. (run 0 absorbs Arrow/py-UDF warmup per BASELINE.md).
 With --plan DIR, writes DIR/<key>.txt with .explain("formatted").
 Cache is cleared between keys exactly as bench.py does.
@@ -19,9 +19,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
 
 def main() -> None:
     ap = argparse.ArgumentParser()
@@ -30,46 +27,11 @@ def main() -> None:
     ap.add_argument("--plan", default=None)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     import engine
+    from bench import SF_DIR, warm_session
 
-    # Same spark.local.dir selection as bench.py ($SPARK_GRAFT_LOCAL_DIR
-    # override, /dev/shm with a free-space guard) so measurements here
-    # are comparable to bench anchors (r17 ADVICE: the old hard-coded
-    # measure_key_shm.py copy is folded in here).
-    from engine.streaming import _usable_tmpfs
-
-    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR") or (
-        "/dev/shm/spark_graft_local" if _usable_tmpfs("/dev/shm") else ""
-    )
-    builder = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("spark-graft-measure")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "24g")
-    )
-    if local_dir:
-        builder = builder.config("spark.local.dir", local_dir)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = warm_session()
     cache_mgr = spark._jsparkSession.sharedState().cacheManager()
-
-    # session warmup (JVM + Arrow), mirrors bench.py
-    engine.QUERIES["agg_groupby_pricing"](spark, SF_DIR).write.format(
-        "noop").mode("overwrite").save()
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("long")
-    def _warm(s):
-        return s
-
-    spark.range(32).select(_warm("id")).write.format("noop").mode(
-        "overwrite").save()
 
     for key in args.keys:
         if args.plan:
