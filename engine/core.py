@@ -159,6 +159,39 @@ def collect_model_artifact(df: DataFrame, max_rows: int = _MODEL_ARTIFACT_MAX_RO
     return rows
 
 
+def path_fingerprint(path: str) -> str | None:
+    """Name, size and ``mtime_ns`` of a file, or of every file under a
+    directory, as one string; ``None`` when ``path`` cannot be stat'ed
+    (missing, or a non-local URI).
+
+    Rewriting, adding or removing a file changes it.  This is the one
+    meaning of "the corpus was regenerated" in the engine: the
+    ``staged_build_once`` markers and the ``io.parquet_schema`` memo
+    both compare it.  A same-size rewrite within one tick of the
+    filesystem's mtime clock (a few ms) goes unseen, so it suits corpora
+    regenerated between runs, not files rewritten mid-query.
+    """
+    import os
+
+    try:
+        if os.path.isdir(path):
+            names = sorted(
+                os.path.relpath(os.path.join(root, f), path)
+                for root, _, files in os.walk(path)
+                for f in files
+            )
+        else:
+            path, name = os.path.split(path)
+            names = [name]
+        return ",".join(
+            f"{n}:{st.st_size}:{st.st_mtime_ns}"
+            for n in names
+            if (st := os.stat(os.path.join(path, n)))
+        )
+    except OSError:
+        return None
+
+
 def staged_build_once(base: str, name: str, sf_dir: str, build) -> str:
     """Build-once cache for deterministic staged directories (streaming
     replay sources, derived partitioned tables).
@@ -182,16 +215,8 @@ def staged_build_once(base: str, name: str, sf_dir: str, build) -> str:
     # The corpus is immutable WITHIN a round but the driver regenerates
     # it BETWEEN rounds (r4 rolled events.ts from ns to µs) — a marker
     # that never expires would replay stale data.  Fingerprint the
-    # source directory (name/size/mtime per file) into the marker and
-    # rebuild on any mismatch.
-    try:
-        fp = ",".join(
-            f"{f}:{st.st_size}:{st.st_mtime_ns}"
-            for f in sorted(os.listdir(sf_dir))
-            if (st := os.stat(os.path.join(sf_dir, f)))
-        )
-    except OSError:
-        fp = "unknown"
+    # source directory into the marker and rebuild on any mismatch.
+    fp = path_fingerprint(sf_dir) or "unknown"
     marker = os.path.join(d, "_STAGING_DONE")
     if os.path.exists(marker):
         with open(marker) as f:

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.core import query, scoped_shuffle_partitions
-from engine.io import configure, load
+from engine.io import configure, load, parquet_schema
 
 _SINK_IDS = itertools.count()
 
@@ -151,8 +151,7 @@ def _events_stream(
     lets the watermark advance between phases.
     """
     configure(spark)
-    schema = spark.read.parquet(src).schema
-    reader = spark.readStream.schema(schema)
+    reader = spark.readStream.schema(parquet_schema(spark, src))
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     sdf = reader.parquet(src)
@@ -2272,9 +2271,8 @@ def stream_bloom_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"row_id": rid, "batch_id": bid, "j": j, "hit": hit}
         )
 
-    schema = spark.read.parquet(src).schema
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(parquet_schema(spark, src))
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )

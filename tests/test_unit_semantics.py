@@ -747,16 +747,16 @@ def test_compaction_file_count_contract(spark):
     oracle's value equality cannot see."""
     import glob
     import os
-    import tempfile
+
+    from engine.io import _scratch_dir
 
     engine.QUERIES["sink_compact_small_files"](spark, SF_DIR).collect()
-    base = os.path.join(tempfile.gettempdir(), "spark_graft_io")
-    frag = glob.glob(os.path.join(base, "compact_fragmented", "part-*"))
-    comp = glob.glob(os.path.join(base, "compact_output", "part-*"))
+    frag = glob.glob(os.path.join(_scratch_dir("compact_fragmented"), "part-*"))
+    comp = glob.glob(os.path.join(_scratch_dir("compact_output"), "part-*"))
     assert len(frag) > 16, f"fragmented write produced {len(frag)} files"
     assert 1 <= len(comp) <= 4, f"compacted write produced {len(comp)} files"
     n_src = load(spark, SF_DIR, "documents").count()
-    n_comp = spark.read.parquet(os.path.join(base, "compact_output")).count()
+    n_comp = spark.read.parquet(_scratch_dir("compact_output")).count()
     assert n_src == n_comp
 
 
@@ -2270,3 +2270,124 @@ def test_fixpoint_monotone_step_converges_to_fixpoint(other_width_session):
                    probe=F.sum("id"), checkpoint_start=True)
     assert len(widths) == 3
     assert sorted(r.id for r in out.collect()) == [0, 0, 0]
+
+
+# -- engine.io.parquet_schema: the per-process schema memo -----------------
+
+
+def _jobs_launched(spark, fn):
+    """(fn(), number of Spark jobs it launched), counted by job group."""
+    import uuid
+
+    sc, group = spark.sparkContext, uuid.uuid4().hex
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    # The status tracker is fed by the listener bus: drain it first.
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write_events(path, unit, tz=None):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ts = [datetime.datetime(2024, 1, 1, h) for h in (0, 5, 23)]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2, 3], pa.int64()),
+            "ts": pa.array(ts, pa.timestamp(unit, tz)),
+            "user_id": pa.array([7, 7, 8], pa.int64()),
+        }),
+        str(path),
+    )
+    return ts
+
+
+def test_schema_memo_warm_load_launches_no_job(spark, tmp_path):
+    _write_events(tmp_path / "events.parquet", "us")
+    _, cold = _jobs_launched(spark, lambda: load(spark, str(tmp_path), "events"))
+    df, warm = _jobs_launched(spark, lambda: load(spark, str(tmp_path), "events"))
+    assert cold >= 1  # the first read infers: the counter sees its job
+    assert warm == 0
+    assert df.count() == 3
+
+
+def test_schema_memo_misses_after_ns_to_us_rewrite(spark, tmp_path):
+    # The corpus roll the memo must survive: events.ts rewritten in
+    # place from timestamp[ns] (bigint under nanosAsLong) to naive
+    # timestamp[us] (timestamp_ntz).  A stale hit would ask for bigint.
+    path = tmp_path / "events.parquet"
+    want = _write_events(path, "ns")
+    ns = load(spark, str(tmp_path), "events")
+    assert dict(ns.dtypes)["ts"] == "timestamp"
+    assert sorted(r.ts for r in ns.collect()) == want
+    _write_events(path, "us")
+    us, n = _jobs_launched(spark, lambda: load(spark, str(tmp_path), "events"))
+    assert n >= 1  # inferred again: the rewrite missed the memo
+    assert dict(us.dtypes)["ts"] == "timestamp"
+    assert sorted(r.ts for r in us.collect()) == want
+
+
+def test_schema_memo_is_keyed_by_inference_confs(spark, tmp_path):
+    # A session whose confs change inference gets its own entry, not
+    # the schema another conf set inferred for the same file.
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from engine.core import scoped_sql_conf
+    from engine.io import parquet_schema
+
+    path = str(tmp_path / "b.parquet")
+    pq.write_table(pa.table({"b": pa.array([b"x"], pa.binary())}), path)
+    conf = "spark.sql.parquet.binaryAsString"
+    with scoped_sql_conf(spark, {conf: "false"}):
+        assert parquet_schema(spark, path)["b"].dataType.simpleString() == "binary"
+    with scoped_sql_conf(spark, {conf: "true"}):
+        assert parquet_schema(spark, path)["b"].dataType.simpleString() == "string"
+
+
+def test_schema_memo_missing_table_raises_as_before(spark, tmp_path):
+    from pyspark.errors import AnalysisException
+
+    with pytest.raises(AnalysisException):
+        spark.read.parquet(str(tmp_path / "nope.parquet"))
+    with pytest.raises(AnalysisException):
+        load(spark, str(tmp_path), "nope")
+
+
+def test_schema_memo_warm_events_stream_launches_no_job(spark, tmp_path):
+    from engine.streaming import _events_stream
+
+    src = tmp_path / "src"
+    src.mkdir()
+    # a staged dir holds load()'s output: UTC-adjusted µs timestamps
+    _write_events(src / "part-0.parquet", "us", "UTC")
+    _, cold = _jobs_launched(spark, lambda: _events_stream(spark, str(src)))
+    sdf, warm = _jobs_launched(spark, lambda: _events_stream(spark, str(src)))
+    assert cold >= 1
+    assert warm == 0
+    assert sdf.isStreaming and dict(sdf.dtypes)["ts"] == "timestamp"
+
+
+def test_scratch_dir_differs_between_processes():
+    # Two sessions at once (bench + pytest) must not share round-trip
+    # files: each process gets its own io scratch directory.
+    import os
+    import subprocess
+    import sys
+
+    from engine.io import _scratch_dir
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = "from engine.io import _scratch_dir; print(_scratch_dir('x'))"
+    procs = [
+        subprocess.Popen([sys.executable, "-c", code], cwd=root,
+                         stdout=subprocess.PIPE, text=True)
+        for _ in range(2)
+    ]
+    dirs = [p.communicate(timeout=300)[0].strip() for p in procs]
+    assert [p.returncode for p in procs] == [0, 0]
+    assert len({*dirs, _scratch_dir("x")}) == 3
