@@ -263,16 +263,20 @@ def pipeline_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     drops the greater member of each verified pair.
     """
     from engine.dedup import minhash_near_pairs
+
+    return _corpus_clean(spark, sf_dir, minhash_near_pairs)
+
+
+def _corpus_clean(spark: SparkSession, sf_dir: str, near_pairs) -> DataFrame:
+    """The corpus-cleaning body of both pipeline_corpus_clean keys; they
+    differ only in ``near_pairs``, the (doc_id, text) → (doc_a, doc_b,
+    ...) near-dup stage (xxhash64 or Karp-Rabin MinHash-LSH)."""
+    from engine.dedup import _neardup_corpus
     from engine.text import _tokens
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     raw = (
-        d.unionByName(
-            d.select(
-                (F.col("doc_id") + 100_000).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(" zz yy")).alias("text"),
-            )
-        )
+        _neardup_corpus(d)
         .unionByName(
             d.select((F.col("doc_id") + 200_000).alias("doc_id"), "text")
         )
@@ -285,24 +289,22 @@ def pipeline_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # Stage 1 — quality gate: ≥ 5 tokens (per-row, no shuffle).
-    n_toks = F.size(_tokens(F.col("text")))
     # gated feeds BOTH the low_quality status and the dedup path — the
     # 4-way union + tokenize re-derived per consumer without persist
-    # (measured ~1 s at sf0.1 on the KR twin; same diamond here).
-    gated = raw.withColumn("lowq", n_toks < 5).persist()
+    # (5.15 → 3.8 s warm at sf0.1 on the KR key).
+    gated = raw.withColumn("lowq", F.size(_tokens(F.col("text"))) < 5).persist()
     low_quality = gated.filter("lowq").select(
         "doc_id", F.lit("low_quality").alias("status")
     )
-    after_q = gated.filter(~F.col("lowq")).select("doc_id", "text")
 
     # Stage 2 — exact dedup on md5 fingerprint, keep lowest doc_id.
-    fp = after_q.withColumn("fp", F.md5("text"))
+    fp = gated.filter(~F.col("lowq")).withColumn("fp", F.md5("text"))
     w = Window.partitionBy("fp").orderBy("doc_id")
     ranked = fp.withColumn("rn", F.row_number().over(w))
     exact_dup = ranked.filter(F.col("rn") > 1).select(
         "doc_id", F.lit("exact_dup").alias("status")
     )
-    # ``uniq`` feeds THREE consumers (the MinHash stage and both status
+    # ``uniq`` feeds THREE consumers (the near-dup stage and both status
     # joins) and its subtree is the whole 4-way union + fingerprint
     # window — persist it so that runs once, not three times.  At
     # cluster scale this is the natural stage boundary you'd checkpoint
@@ -311,10 +313,10 @@ def pipeline_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
         ranked.filter(F.col("rn") == 1).select("doc_id", "text").persist()
     )
 
-    # Stage 3 — near-dup removal via banded MinHash-LSH + exact-Jaccard
-    # verify; drop the greater member of each pair.  ``drop`` is probed
-    # by both status joins — persist the (tiny) id set too.
-    pairs = minhash_near_pairs(uniq)
+    # Stage 3 — near-dup removal: drop the greater member of each
+    # verified pair.  ``drop`` is probed by both status joins — persist
+    # the (tiny) id set too.
+    pairs = near_pairs(uniq)
     drop = pairs.select(F.col("doc_b").alias("doc_id")).distinct().persist()
     near_dup = uniq.join(drop, "doc_id", "left_semi").select(
         "doc_id", F.lit("near_dup").alias("status")
@@ -322,8 +324,11 @@ def pipeline_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = uniq.join(drop, "doc_id", "left_anti").select(
         "doc_id", F.lit("kept").alias("status")
     )
-
-    return kept.unionByName(near_dup).unionByName(exact_dup).unionByName(low_quality)
+    return (
+        kept.unionByName(near_dup)
+        .unionByName(exact_dup)
+        .unionByName(low_quality)
+    )
 
 
 @query(
@@ -1276,7 +1281,7 @@ def pipeline_embedding_dedup_polyhash(
     # Project the UDF result ONCE before fanning out (HOF/UDF re-eval
     # trap): posexplode + element_at below read a plain column.
     sigged = corpus.select("vec_id", _embp_sigs("embedding").alias("sigs")).persist()
-    # EAGER (r13, the kr_simhash_pairs_from_sums discipline): the lazy
+    # EAGER (r13, the simhash_pairs_from_sums discipline): the lazy
     # persist raced — both candidate self-join sides + both CC union
     # arms start together and each recomputes the uncached subtree
     # ("Block already exists" warnings confirmed 2-4 duplicate Arrow
@@ -2991,57 +2996,8 @@ def pipeline_corpus_clean_polyhash(spark: SparkSession, sf_dir: str) -> DataFram
     all-pairs), persisted `uniq` diamond feeding the near-dup stage and
     both status joins."""
     from engine.dedup import kr_minhash_near_pairs
-    from engine.text import _tokens
 
-    d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    raw = (
-        d.unionByName(
-            d.select(
-                (F.col("doc_id") + 100_000).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(" zz yy")).alias("text"),
-            )
-        )
-        .unionByName(
-            d.select((F.col("doc_id") + 200_000).alias("doc_id"), "text")
-        )
-        .unionByName(
-            d.select(
-                (F.col("doc_id") + 300_000).alias("doc_id"),
-                F.lit("zz spam").alias("text"),
-            )
-        )
-    )
-    # gated diamond (low_quality + dedup path): persist saves the
-    # re-derived 4-way union + tokenize (5.15 → 3.8 s warm at sf0.1).
-    gated = raw.withColumn("lowq", F.size(_tokens(F.col("text"))) < 5).persist()
-    low_quality = gated.filter("lowq").select(
-        "doc_id", F.lit("low_quality").alias("status")
-    )
-    fp = gated.filter(~F.col("lowq")).withColumn("fp", F.md5("text"))
-    w = Window.partitionBy("fp").orderBy("doc_id")
-    ranked = fp.withColumn("rn", F.row_number().over(w))
-    exact_dup = ranked.filter(F.col("rn") > 1).select(
-        "doc_id", F.lit("exact_dup").alias("status")
-    )
-    uniq = (
-        ranked.filter(F.col("rn") == 1).select("doc_id", "text").persist()
-    )
-    # arrow=True (r18): kernel-built shingles won every interleaved A/B
-    # round on this key (3.97-4.47 → 3.68-3.84 s); exact-equal chain,
-    # oracle untouched.
-    pairs = kr_minhash_near_pairs(uniq, arrow=True)
-    drop = pairs.select(F.col("doc_b").alias("doc_id")).distinct().persist()
-    near_dup = uniq.join(drop, "doc_id", "left_semi").select(
-        "doc_id", F.lit("near_dup").alias("status")
-    )
-    kept = uniq.join(drop, "doc_id", "left_anti").select(
-        "doc_id", F.lit("kept").alias("status")
-    )
-    return (
-        kept.unionByName(near_dup)
-        .unionByName(exact_dup)
-        .unionByName(low_quality)
-    )
+    return _corpus_clean(spark, sf_dir, kr_minhash_near_pairs)
 
 
 # -- dataset version diff (r14 breadth: reproducibility audit) --------------

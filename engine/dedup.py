@@ -2,14 +2,18 @@
 normalized, and MinHash-LSH near-duplicate detection.
 
 The corpus has no native duplicates at test scale, so each key builds a
-deterministic duplicated corpus inline (originals ∪ mutated copies at
-``doc_id + 100000``) — the dedup path is exercised for real, and the
-expected survivor set is exactly the originals.
+deterministic duplicated corpus (originals ∪ mutated copies at
+``doc_id + 100000``; the near-dup keys share :func:`_neardup_corpus`) —
+the dedup path is exercised for real, and the expected survivor set is
+exactly the originals.
 
 Scale design (SURVEY.md §1.3c): near-dup detection is banded MinHash —
 shingle → per-seed min-hash → band key → bucket self-join — candidate
 pairs are generated per LSH bucket, NEVER by an all-pairs cross join.
 Verification (exact Jaccard) runs only on the bounded candidate set.
+Each stage exists once (the ``_mh_*`` functions, the SimHash tail
+:func:`simhash_pairs_from_sums`); the rows-only xxhash64 keys and the
+hash-verified Karp-Rabin keys pass in their own hash Columns.
 """
 
 from __future__ import annotations
@@ -28,6 +32,19 @@ def _tokens(col: F.Column) -> F.Column:
 
 
 _TOKENS_SQL = "list_filter(string_split(lower({c}), ' '), t -> t <> '')"
+
+
+def _neardup_corpus(d: DataFrame) -> DataFrame:
+    """The planted near-dup corpus over a (doc_id, text) frame: the
+    originals plus one near-copy of each, (doc_id + _COPY_OFFSET,
+    text || ' zz yy') — 2 appended tokens, so every copy's shingle set
+    is its original's plus a few."""
+    return d.unionByName(
+        d.select(
+            (F.col("doc_id") + _COPY_OFFSET).alias("doc_id"),
+            F.concat(F.col("text"), F.lit(" zz yy")).alias("text"),
+        )
+    )
 
 
 @query(
@@ -115,24 +132,43 @@ def dedup_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _N_HASHES = 16
 _BAND_SIZE = 4  # → 4 bands of 4 hashes
+_N_BANDS = _N_HASHES // _BAND_SIZE
+_M31 = (1 << 31) - 1  # Mersenne prime: universal-hash modulus
+
+# ---------------------------------------------------------------------------
+# The MinHash-LSH chain, one stage function per step, shared by every
+# MinHash key (rows-only xxhash64 and hash-verified Karp-Rabin alike):
+#   shingle hashes (doc_id, sh) → _mh_mins → _mh_bands (band-key fold
+#   passed in) → _mh_candidates (bucket self-join) → _mh_verify (exact
+#   set intersection) → 2·n_common ≥ union gate (_mh_pairs composes it).
+# The families differ only in the shingle hash and the band-key fold.
+# ---------------------------------------------------------------------------
+
+# 16 hash-family members derived from ONE shingle hash via universal
+# hashing h_i = (a_i·h + b_i) mod P, P = 2^31−1 (Mersenne prime): one
+# string hash per shingle instead of 16, and the mins reduce columnar in
+# a single pass — no 16× row explosion, no 16× string hashing.  The mod
+# is REQUIRED: without it h_i is strictly monotone in h, every min-hash
+# picks the same argmin shingle, and the banded LSH degenerates to 1-hash
+# LSH (recall ≈ J instead of 1−(1−J⁴)⁴) — found by the r2 advisor
+# (ADVICE.md #1), pinned by the recall tests.  ANSI mode (Spark 4
+# default) forbids wrapping arithmetic, so bound the operands: h < 2^31
+# and a_i < P < 2^31 keep a_i·h + b_i < 2^62 + 2^31 < 2^63 —
+# overflow-free in int64, then `% P` folds back to 31 uniform bits.
+# Module-level because the KR oracle SQL is built at decorator time.
+_MH_A = [(2654435761 * (2 * i + 1)) % _M31 or 1 for i in range(_N_HASHES)]
+_MH_B = [(40503 * i * i + 987654321 + i) % _M31 for i in range(_N_HASHES)]
 
 
-def minhash_near_pairs(corpus: DataFrame) -> DataFrame:
-    """Near-dup pairs (doc_a, doc_b, jaccard ≥ 0.5) over a (doc_id, text)
-    corpus via k-shingle MinHash + LSH banding.
+def _xx_shingles(corpus: DataFrame) -> DataFrame:
+    """(doc_id, sh) xxhash64 hashes of each doc's DISTINCT 3-word
+    shingles — the feature set of the rows-only near-dup keys
+    (``dedup_minhash_near``, ``dedup_simhash``, ``pipeline_corpus_clean``).
 
-    Shared engine primitive: backs the ``dedup_minhash_near`` key and the
-    ``pipeline_corpus_clean`` composite.  Every step is a DataFrame op
-    with deterministic seeds (no RNG):
-      1. 3-word shingles per doc (indexed ``transform`` — per-row, no
-         shuffle);
-      2. 16 min-hashes per doc from one xxhash64 via a mod-P universal
-         family — columnar min reduction, no 16× explosion;
-      3. 4 band keys per doc = xxhash64 of 4 consecutive min-hashes;
-      4. candidate pairs = docs sharing a band key (self-join on the
-         band key — bucket-local, never all-pairs);
-      5. exact shingle-Jaccard verification on candidates only.
-    """
+    Shingles are carried as their 64-bit xxhash, not strings: the
+    exploded payload shrinks ~6×, joins compare longs, and hashed-set
+    Jaccard equals exact shingle Jaccard up to a ~2^-40 collision
+    probability."""
     # ``toks`` must be a materialized column, not the _tokens(text)
     # expression tree: element_at re-evaluates its argument subtree per
     # lambda element, so an inlined split() re-tokenizes the doc for
@@ -146,75 +182,82 @@ def minhash_near_pairs(corpus: DataFrame) -> DataFrame:
             ),
         )
     )
-    # The (doc, shingle) relation feeds three consumers (signatures +
-    # both sides of the Jaccard verify) — persist the diamond so the
-    # tokenize+explode runs once, not three times.  Shingles are carried
-    # as their 64-bit xxhash, not strings: the persisted payload shrinks
-    # ~6×, joins compare longs, and hashed-set Jaccard equals exact
-    # shingle Jaccard up to a ~2^-40 collision probability.  At cluster
-    # scale this is the stage you'd checkpoint.
-    doc_shingle = (
-        corpus.select("doc_id", _tokens(F.col("text")).alias("toks"))
-        .select(
-            "doc_id",
-            F.explode(F.transform(shingles, lambda s: F.xxhash64(s))).alias(
-                "shingle"
-            ),
-        )
-        .persist()
+    return corpus.select("doc_id", _tokens(F.col("text")).alias("toks")).select(
+        "doc_id",
+        F.explode(F.transform(shingles, lambda s: F.xxhash64(s))).alias("sh"),
     )
 
-    # 16 hash-family members derived from ONE xxhash64 via universal
-    # hashing h_i = (a_i·h + b_i) mod P, P = 2^31−1 (Mersenne prime):
-    # one string hash per shingle instead of 16, and the mins reduce
-    # columnar in a single pass — no 16× row explosion, no 16× string
-    # hashing.  The mod is REQUIRED: without it h_i is strictly monotone
-    # in h, every min-hash picks the same argmin shingle, and the banded
-    # LSH degenerates to 1-hash LSH (recall ≈ J instead of 1−(1−J⁴)⁴) —
-    # found by the r2 advisor (ADVICE.md #1), pinned by the recall test
-    # in tests/test_semantics.py.
-    # ANSI mode (Spark 4 default) forbids wrapping arithmetic, so bound
-    # the operands: h31 < 2^31 and a_i < P < 2^31 keep a_i·h31 + b_i
-    # < 2^62 + 2^31 < 2^63 — overflow-free in int64, then `% P` folds
-    # back to 31 uniform bits (ample for min-hash ranking).
-    _P = (1 << 31) - 1
-    _A = [(2654435761 * (2 * i + 1)) % _P or 1 for i in range(_N_HASHES)]
-    _B = [(40503 * i * i + 987654321 + i) % _P for i in range(_N_HASHES)]
-    h31 = F.col("shingle").bitwiseAND(F.lit(0x7FFFFFFF))
-    sig = doc_shingle.select(
-        "doc_id", h31.alias("h")
-    ).groupBy("doc_id").agg(
+
+def _mh_mins(sh: DataFrame, h: F.Column) -> DataFrame:
+    """(doc_id, m0..m15): per-doc min of each universal-family member
+    over the shingle hash ``h`` (< 2^31) — one map-side-combinable
+    groupBy, columnar, no 16× explosion."""
+    return sh.groupBy("doc_id").agg(
         *[
-            F.min(
-                (F.col("h") * F.lit(_A[i]) + F.lit(_B[i])) % F.lit(_P)
-            ).alias(f"minh{i}")
+            F.min((h * F.lit(_MH_A[i]) + F.lit(_MH_B[i])) % F.lit(_M31)).alias(
+                f"m{i}"
+            )
             for i in range(_N_HASHES)
         ]
     )
 
-    # One band key per 4 consecutive min-hashes; explode to (doc, band,
-    # band_key) rows for the bucket self-join.
-    band_keys = F.array(
-        *[
-            F.xxhash64(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"minh{i}").cast("string")
-                        for i in range(b * _BAND_SIZE, (b + 1) * _BAND_SIZE)
-                    ],
-                )
-            )
-            for b in range(_N_HASHES // _BAND_SIZE)
-        ]
-    )
-    band = sig.select(
-        "doc_id", F.posexplode(band_keys).alias("band", "band_key")
+
+def _xx_band_key(b: int) -> F.Column:
+    """Rows-only band key: xxhash64 of band b's 4 min-hashes joined by
+    ','."""
+    return F.xxhash64(
+        F.concat_ws(
+            ",",
+            *[
+                F.col(f"m{i}").cast("string")
+                for i in range(b * _BAND_SIZE, (b + 1) * _BAND_SIZE)
+            ],
+        )
     )
 
-    a = band.alias("a")
-    b = band.alias("b")
-    cand = (
+
+def _mh_band_fold_sql(b: int) -> str:
+    """Base-131 mod-M31 fold of band b's 4 consecutive min-hashes —
+    the integer band key both engines compute bit-identically."""
+    i0, i1, i2, i3 = (b * _BAND_SIZE + j for j in range(4))
+    return (
+        f"((((m{i0} * 131 + m{i1}) % {_M31}) * 131 + m{i2}) % {_M31}"
+        f" * 131 + m{i3}) % {_M31}"
+    )
+
+
+def _mh_band_fold(b: int) -> F.Column:
+    """Hash-verified band key: Spark twin of :func:`_mh_band_fold_sql`
+    over the m{i} columns (every intermediate < 2³⁸)."""
+    i0, i1, i2, i3 = (b * _BAND_SIZE + j for j in range(4))
+    return (
+        (
+            ((F.col(f"m{i0}") * 131 + F.col(f"m{i1}")) % _M31) * 131
+            + F.col(f"m{i2}")
+        )
+        % _M31
+        * 131
+        + F.col(f"m{i3}")
+    ) % _M31
+
+
+def _mh_bands(mins: DataFrame, band_key) -> DataFrame:
+    """(doc_id, band, band_key) — one row per band, the key folded from
+    its 4 consecutive min-hashes by ``band_key(b)``."""
+    return mins.select(
+        "doc_id",
+        F.posexplode(F.array(*[band_key(b) for b in range(_N_BANDS)])).alias(
+            "band", "band_key"
+        ),
+    )
+
+
+def _mh_candidates(bands: DataFrame) -> DataFrame:
+    """Distinct (doc_a < doc_b) pairs sharing a band key — a bucket-local
+    self-join, never all-pairs."""
+    a = bands.alias("a")
+    b = bands.alias("b")
+    return (
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
@@ -227,44 +270,105 @@ def minhash_near_pairs(corpus: DataFrame) -> DataFrame:
         .distinct()
     )
 
-    # Exact Jaccard verification on the bounded candidate set.
-    # doc_shingle is already per-doc distinct (array_distinct upstream) —
-    # no dedup shuffle; set sizes are a tiny count over the persisted
-    # relation.
-    sh = doc_shingle
-    n_sh = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    sh_a = sh.withColumnRenamed("doc_id", "doc_a")
-    sh_b = sh.select(
-        F.col("doc_id").alias("b_id"), F.col("shingle").alias("shingle_b")
-    )
-    # No broadcast hint on cand: candidate-PAIR volume grows with corpus
-    # size × duplication density (a web crawl at 100 TB yields multi-GB
-    # pair lists) — a hard hint here is a forced-broadcast OOM.  AQE's
-    # size-based selection still broadcasts at bench scale and degrades
-    # to a shuffle join at cluster scale (r11 audit policy, composite.py).
-    common = (
-        sh_a.join(cand, "doc_a")
+
+def _mh_verify(
+    sh: DataFrame, cand: DataFrame, left: str = "doc_a", right: str = "doc_b"
+) -> DataFrame:
+    """Exact shingle-set intersection on the candidate pairs only:
+    (left, right, n_common, n_a, n_b), n_a/n_b the set sizes of the
+    ``left``/``right`` doc.  ``sh`` is per-doc distinct (every shingle
+    builder emits sets), so no dedup shuffle; set sizes are a tiny count
+    over the (persisted) shingle relation.
+
+    No broadcast hint on cand: candidate-PAIR volume grows with corpus
+    size × duplication density (a web crawl at 100 TB yields multi-GB
+    pair lists) — a hard hint here is a forced-broadcast OOM.  AQE's
+    size-based selection still broadcasts at bench scale and degrades
+    to a shuffle join at cluster scale (r11 audit policy, composite.py)."""
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
+    sh_l = sh.withColumnRenamed("doc_id", left)
+    sh_r = sh.select(F.col("doc_id").alias("r_id"), F.col("sh").alias("sh_r"))
+    inter = (
+        sh_l.join(cand, left)
         .join(
-            sh_b,
-            (F.col("doc_b") == F.col("b_id"))
-            & (F.col("shingle") == F.col("shingle_b")),
+            sh_r,
+            (F.col(right) == F.col("r_id")) & (F.col("sh") == F.col("sh_r")),
         )
-        .groupBy("doc_a", "doc_b")
+        .groupBy(left, right)
         .agg(F.count("*").alias("n_common"))
     )
-    return (
-        common.join(n_sh.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "n_a"), "doc_a")
-        .join(n_sh.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "n_b"), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.col("n_common").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= 0.5)
+    return inter.join(
+        sizes.select(F.col("doc_id").alias(left), F.col("n").alias("n_a")), left
+    ).join(
+        sizes.select(F.col("doc_id").alias(right), F.col("n").alias("n_b")), right
     )
+
+
+def _jaccard_ge_half() -> F.Column:
+    """Exact J ≥ 0.5 on integer counts: n_common / union ≥ 1/2 ⇔
+    2·n_common ≥ union (no float on the gate)."""
+    return F.col("n_common") * 2 >= F.col("n_a") + F.col("n_b") - F.col("n_common")
+
+
+def _jac_e6() -> F.Column:
+    """Exact Jaccard in millionths by integer division (oracle-safe)."""
+    return (
+        F.expr("n_common * 1000000 div (n_a + n_b - n_common)")
+        .cast("long")
+        .alias("jac_e6")
+    )
+
+
+def _mh_pairs(
+    sh: DataFrame, h: F.Column, band_key, eager: bool = False
+) -> DataFrame:
+    """The MinHash-LSH chain over a per-doc distinct (doc_id, sh) frame:
+    mins of ``h`` → bands keyed by ``band_key`` → bucket candidates →
+    exact verify → J ≥ 0.5.  Returns (doc_a, doc_b, n_common, n_a, n_b).
+
+    sh is a diamond (mins + both verify sides) and is persisted.
+    ``eager`` is the r12 lazy-persist-race dial: the band self-join races
+    a LAZY sh persist, computing the shingle subtree 2×.  Measured at
+    sf0.1 (cold cache, min of 2): crosslingual 5.02 s lazy → 4.31 s
+    eager (its sh subtree carries the lexicon normalize + window);
+    minhash_polyhash 2.05 s lazy → 2.43 s eager (cheap subtree — the
+    extra driver job outweighs the race).  Callers with an expensive
+    shingle stream pass eager=True."""
+    sh = sh.persist()
+    if eager:
+        sh.count()
+    cand = _mh_candidates(_mh_bands(_mh_mins(sh, h), band_key))
+    return _mh_verify(sh, cand).filter(_jaccard_ge_half())
+
+
+def xx_pairs_from_sh(sh: DataFrame) -> DataFrame:
+    """Rows-only MinHash near-dup pairs (doc_a, doc_b, jaccard ≥ 0.5)
+    over an xxhash64 (doc_id, sh) shingle frame: the shared chain with
+    h = the hash's low 31 bits and xxhash64 band keys."""
+    union = F.col("n_a") + F.col("n_b") - F.col("n_common")
+    return _mh_pairs(
+        sh, F.col("sh").bitwiseAND(F.lit(0x7FFFFFFF)), _xx_band_key
+    ).select(
+        "doc_a",
+        "doc_b",
+        (F.col("n_common").cast("double") / union).alias("jaccard"),
+    )
+
+
+def minhash_near_pairs(corpus: DataFrame) -> DataFrame:
+    """Near-dup pairs (doc_a, doc_b, jaccard ≥ 0.5) over a (doc_id, text)
+    corpus via k-shingle MinHash + LSH banding.
+
+    Shared engine primitive: backs the ``dedup_minhash_near`` key and the
+    ``pipeline_corpus_clean`` composite.  Every step is a DataFrame op
+    with deterministic seeds (no RNG):
+      1. 3-word shingles per doc, xxhash64-hashed (:func:`_xx_shingles`);
+      2. 16 min-hashes per doc from the mod-P universal family;
+      3. 4 band keys per doc = xxhash64 of 4 consecutive min-hashes;
+      4. candidate pairs = docs sharing a band key (self-join on the
+         band key — bucket-local, never all-pairs);
+      5. exact shingle-Jaccard verification on candidates only."""
+    return xx_pairs_from_sh(_xx_shingles(corpus))
 
 
 @query("dedup_minhash_near", oracle=None)  # rows-only: xxhash64 ≠ any DuckDB fn
@@ -278,13 +382,7 @@ def dedup_minhash_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_unit_semantics.py recall assertion).
     """
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = d.unionByName(
-        d.select(
-            (F.col("doc_id") + _COPY_OFFSET).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(" zz yy")).alias("text"),
-        )
-    )
-    return minhash_near_pairs(corpus)
+    return minhash_near_pairs(_neardup_corpus(d))
 
 
 @query(
@@ -363,38 +461,56 @@ _SIMHASH_BITS = 32
 _SIMHASH_BAND = 8  # 4 bands of 8 bits; verify gate is hamming ≤ 3
 
 
-def simhash_pairs(feat: DataFrame) -> DataFrame:
-    """(doc_id, token:long) hashed features → near-dup pairs
-    (doc_a, doc_b, hamming ≤ 3) via 32-bit SimHash + 8-bit banding.
-
-    Shared engine primitive: backs ``dedup_simhash`` (text shingle
-    features) and ``mm_simhash_bytes`` (binary byte-gram features).
-    Banded candidate generation — bucket-local self-join, never
-    all-pairs; see dedup_simhash's docstring for the band-size
-    measurement."""
-    h = F.col("token")
-    # per (doc, bit): Σ ±1 as 32 columnar sums, then sign → bit.
-    sums = feat.groupBy("doc_id").agg(
+def _simhash_sums(feat: DataFrame, bit_set) -> DataFrame:
+    """(doc_id, s0..s31): per-bit Σ ±1 over each doc's (doc_id, sh)
+    features, +1 where ``bit_set(b)`` holds — 32 columnar sums in one
+    map-side-combinable groupBy."""
+    return feat.groupBy("doc_id").agg(
         *[
-            F.sum(
-                F.when(F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"s{b}")
+            F.sum(F.when(bit_set(b), 1).otherwise(-1)).alias(f"s{b}")
             for b in range(_SIMHASH_BITS)
         ]
     )
+
+
+def simhash_pairs_from_sums(sums: DataFrame, eager: bool = False) -> DataFrame:
+    """(doc_id, s0..s31) per-bit sign sums → near-dup pairs (doc_a,
+    doc_b, hamming: int ≤ 3): sign → 32-bit signature → 4×8-bit bands →
+    bucket self-join → hamming gate.  The one SimHash tail: every
+    SimHash key computes its sums (in a groupBy, or inside an Arrow
+    kernel like ``mm_simhash_bytes_polyhash``) and ends here; every op
+    is bit-identical in DuckDB (_SH_SIG_SQL and the callers' band CTEs
+    are the SQL twins).  Banded candidate generation — bucket-local,
+    never all-pairs; see dedup_simhash's docstring for the band-size
+    measurement.
+
+    ``eager`` materializes the signature cache with one count() BEFORE
+    the band self-join builds.  A lazy persist gets RACED by the join's
+    two stages — each computes the uncached subtree concurrently.  For
+    a cheap subtree the race is nearly free (both passes overlap on
+    idle cores: 1.89 s lazy vs 2.26 s eager for dedup_simhash_polyhash
+    at sf0.1 — the extra serialized pass LOSES), so those callers stay
+    lazy; for a Python-bound Arrow-kernel subtree the race doubles the
+    worker-limited kernel work (~8 s vs ~5 s for the mm byte-gram
+    caller), so it passes eager=True."""
     sig_col = None
     for b in range(_SIMHASH_BITS):
-        bit = F.when(F.col(f"s{b}") >= 0, F.lit(1 << b)).otherwise(F.lit(0))
+        bit = F.when(F.col(f"s{b}") >= 0, F.lit(1 << b).cast("long")).otherwise(
+            F.lit(0).cast("long")
+        )
         sig_col = bit if sig_col is None else sig_col + bit
-    sigs = sums.select("doc_id", sig_col.alias("sig"))
-
-    n_bands = _SIMHASH_BITS // _SIMHASH_BAND
+    # sigs feeds both sides of the band self-join — without persist the
+    # whole feature → 32-sum subtree re-derives per consumer
+    # (graph_triangle_count precedent, ~|docs| rows cached).
+    sigs = sums.select("doc_id", sig_col.alias("sig")).persist()
+    if eager:
+        sigs.count()
     band_vals = F.array(
         *[
             F.shiftright(F.col("sig"), b * _SIMHASH_BAND).bitwiseAND(
                 F.lit((1 << _SIMHASH_BAND) - 1)
             )
-            for b in range(n_bands)
+            for b in range(_SIMHASH_BITS // _SIMHASH_BAND)
         ]
     )
     bands = sigs.select(
@@ -426,6 +542,19 @@ def simhash_pairs(feat: DataFrame) -> DataFrame:
     )
 
 
+def simhash_pairs(feat: DataFrame) -> DataFrame:
+    """(doc_id, sh: long) xxhash64 features → near-dup pairs (doc_a,
+    doc_b, hamming: int ≤ 3): bit b of a feature is bit b of its hash,
+    then the shared :func:`simhash_pairs_from_sums` tail.  Backs
+    ``dedup_simhash`` (text shingle features) and ``mm_simhash_bytes``
+    (binary byte-gram features)."""
+    return simhash_pairs_from_sums(
+        _simhash_sums(
+            feat, lambda b: F.shiftright(F.col("sh"), b).bitwiseAND(F.lit(1)) == 1
+        )
+    )
+
+
 @query("dedup_simhash", oracle=None)  # rows-only: xxhash64 bit extraction
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup: 32-bit signature where bit b is the sign of
@@ -441,38 +570,15 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates on huge corpora; at that scale raise _SIMHASH_BITS and
     the hamming gate TOGETHER (keep gate/bits ≈ 0.1 and bands = gate+1).
 
-    Features are distinct 3-word shingles, not tokens: the corpus draws
-    from a ~40-word vocabulary, so token-level signatures of unrelated
-    docs are near-identical (a 16-bit token-feature first cut produced
-    258k false candidates); the shingle space is large enough for
-    signatures to decorrelate.  Same planted near-copies as
-    dedup_minhash_near.
+    Features are distinct 3-word shingles (:func:`_xx_shingles`), not
+    tokens: the corpus draws from a ~40-word vocabulary, so token-level
+    signatures of unrelated docs are near-identical (a 16-bit
+    token-feature first cut produced 258k false candidates); the
+    shingle space is large enough for signatures to decorrelate.  Same
+    planted near-copies as dedup_minhash_near.
     """
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = d.unionByName(
-        d.select(
-            (F.col("doc_id") + _COPY_OFFSET).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(" zz yy")).alias("text"),
-        )
-    )
-    # Materialized token column, not the _tokens(text) tree — see the
-    # O(n²) element_at note in minhash_near_pairs above.
-    toks = F.col("toks")
-    shingles = F.array_distinct(
-        F.transform(
-            F.slice(toks, 1, F.greatest(F.size(toks) - 2, F.lit(0))),
-            lambda x, i: F.concat_ws(
-                " ", x, F.element_at(toks, i + 2), F.element_at(toks, i + 3)
-            ),
-        )
-    )
-    # Explode pre-hashed shingles (longs, not strings) — the exploded
-    # relation and the groupBy shuffle carry 8 bytes per feature.
-    tok = corpus.select("doc_id", _tokens(F.col("text")).alias("toks")).select(
-        "doc_id",
-        F.explode(F.transform(shingles, lambda s: F.xxhash64(s))).alias("token"),
-    )
-    return simhash_pairs(tok)
+    return simhash_pairs(_xx_shingles(_neardup_corpus(d)))
 
 
 # ---------------------------------------------------------------------------
@@ -484,10 +590,9 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _FP_MOD = 1_099_511_627_689  # prime < 2^40 (text.py char-fold modulus)
-_M31 = (1 << 31) - 1  # Mersenne prime: universal-hash modulus
 # Per-bit universal hash family g_b(x) = (A_b·x + C_b) mod M, bit = g_b
-# mod 2 — same (a, b) construction as minhash_near_pairs' family; the
-# `% _M31` is REQUIRED (see that function's degenerate-LSH note).
+# mod 2 — same (a, b) construction as the MinHash family _MH_A/_MH_B;
+# the `% _M31` is REQUIRED (see the degenerate-LSH note there).
 _SH_A = [(2654435761 * (2 * b + 1)) % _M31 or 1 for b in range(_SIMHASH_BITS)]
 _SH_C = [(40503 * b * b + 987654321 + b) % _M31 for b in range(_SIMHASH_BITS)]
 
@@ -551,26 +656,29 @@ def _kr_t31(tok) -> F.Column:
     )
 
 
-def _kr_shingles_arrow(corpus: DataFrame) -> DataFrame:
-    """:func:`_kr_shingles` as ONE Arrow/numpy kernel over the raw
-    (doc_id, text) scan — guide §4.2's "hand whole batches to
-    vectorized native code" — replacing the exploded JVM chain
-    (posexplode → per-char interpreted fold → two lead() windows →
-    distinct ≈ 54 tokens × ~6 lambda evals per doc + a generate + a
-    sort + a hash-agg).  The kernel emits the per-doc-DISTINCT shingle
-    set directly, exact-integer EQUAL to :func:`_kr_shingles` (the
-    whole-corpus equality is pinned in tests/test_unit_semantics.py;
-    every consumer's DuckDB oracle replays the chain independently).
+def _kr_shingles(corpus: DataFrame) -> DataFrame:
+    """DISTINCT (doc_id, sh) Karp-Rabin 3-token shingle hashes of a
+    (doc_id, text) corpus — the DuckDB-expressible feature set behind
+    the whole hash-verified near-dup family: `dedup_simhash_polyhash`,
+    `dedup_setsim_prefix_filter`, `dedup_minhash_polyhash`,
+    `dedup_incremental_minhash`, `dedup_minhash_calibration` and
+    `pipeline_corpus_clean_polyhash` (corpus-agnostic SQL twin:
+    :data:`_KR_TOK_SH_SQL`).  Definition: per-token char fold
+    h = (h·31 + codepoint) mod p₄₀, reduced mod M31; shingle = base-131
+    fold of three consecutive token hashes mod M31; distinct per doc.
 
-    CALLER-SELECTED by measurement (r18 interleaved A/B at sf0.1, both
-    orders): the kernel wins where sh is PERSISTED and feeds
-    window/multi-consumer chains — setsim 5.8→3.1 s mins,
-    corpus_clean_polyhash 3.97→3.68 — because the persisted frame is
-    built in one Python pass and caches the already-distinct rows; it
-    LOSES slightly where sh feeds one direct groupBy whose exchange
-    the JVM form's window partitioning already satisfies (simhash
-    1.83 vs 2.10, incremental 2.35 vs 2.75, calibration tie) — those
-    callers keep the JVM form.
+    ONE Arrow/numpy kernel over the raw (doc_id, text) scan — guide
+    §4.2's "hand whole batches to vectorized native code" — that emits
+    the per-doc-DISTINCT shingle set directly: no exploded token rows,
+    no per-char interpreted fold, no lead() windows.  It replaced an
+    exploded JVM chain (posexplode → per-char fold → two lead() windows
+    → distinct); A/B at sf0.1 (local[4], 6 rotated rounds, medians) the
+    kernel was faster for every caller, e.g. dedup_simhash_polyhash
+    3.61 → 2.61 s and dedup_minhash_polyhash 3.62 → 2.41 s.  The
+    Python-reference equality (hypothesis + the full planted corpus +
+    NULL/short/multi-space rows) is pinned in
+    tests/test_unit_semantics.py; every consumer's DuckDB oracle replays
+    the definition independently.
 
     Exactness argument: Horner fold h=(h·31+c) mod p is linear, so
     h = Σ c_j·31^(L-1-j) mod p — computed vectorized as per-char
@@ -582,8 +690,8 @@ def _kr_shingles_arrow(corpus: DataFrame) -> DataFrame:
     with empties dropped — consecutive spaces yield zero-length
     segments that are skipped, mirroring `_tokens`; codepoints come
     from UTF-32-LE so non-ASCII would match F.ascii's codepoint
-    semantics.  NULL texts produce no rows (posexplode-of-null
-    parity)."""
+    semantics.  NULL texts and docs with fewer than 3 tokens produce no
+    rows."""
 
     def kernel(it):
         import numpy as np
@@ -656,38 +764,6 @@ def _kr_shingles_arrow(corpus: DataFrame) -> DataFrame:
     )
 
 
-def _kr_shingles(corpus: DataFrame) -> DataFrame:
-    """DISTINCT (doc_id, sh) Karp-Rabin 3-token shingle hashes — the
-    DuckDB-expressible feature set behind the whole hash-verified
-    near-dup family: `dedup_simhash_polyhash`,
-    `dedup_setsim_prefix_filter`, `dedup_minhash_polyhash`,
-    `dedup_incremental_minhash`, and `pipeline_corpus_clean_polyhash`
-    (corpus-agnostic SQL twin: :data:`_KR_TOK_SH_SQL`).
-
-    Shingle hashing is ONE char fold per exploded token (~6 interpreted
-    lambda evals each — never a per-shingle fold over the 3-token
-    string, never a nested per-position fold: the winnowing 6.3 s
-    trap); consecutive token hashes meet via two lead() windows, and
-    ONE doc_id exchange serves window + distinct + any downstream
-    doc_id groupBy (subset rule).  :func:`_kr_shingles_arrow` is the
-    exact-equal Arrow-kernel twin, selected per caller by measurement
-    (see its docstring for the decision table)."""
-    tok = corpus.select(
-        "doc_id", F.posexplode(_tokens(F.col("text"))).alias("pos", "tok")
-    )
-    hashed = tok.select("doc_id", "pos", _kr_t31(F.col("tok")).alias("t31"))
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    sh = (
-        (F.col("t31") * 131 + F.lead("t31", 1).over(w)) % _M31 * 131
-        + F.lead("t31", 2).over(w)
-    ) % _M31
-    return (
-        hashed.select("doc_id", sh.alias("sh"))
-        .where(F.col("sh").isNotNull())
-        .distinct()
-    )
-
-
 @query(
     "dedup_simhash_polyhash",
     oracle=f"""
@@ -726,110 +802,19 @@ def dedup_simhash_polyhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     planted copies: 434/500 at sf0.01, within noise of the xxhash
     sibling's 438 — the family swap costs nothing).
 
-    Shingle hashing is ONE char fold per token (exploded rows, ~6
-    lambda evals each), never a per-shingle fold over the 3-token
-    string (~3× the interpreted-HOF cost) and never a nested
-    per-position fold (>200 evals/row → the winnowing 6.3 s trap);
-    consecutive token hashes meet via two lead() windows.
-
-    Shuffle discipline: ONE exchange on doc_id serves the whole
-    signature stage — the lead window partitions by doc_id, and the
-    downstream distinct on (doc_id, sh) plus the 32-sum groupBy(doc_id)
-    both have their ClusteredDistribution satisfied by that
-    HashPartitioning (subset rule, win_gaps_islands precedent).  The
-    band self-join is bucket-local, never all-pairs."""
+    Shingles come from the :func:`_kr_shingles` kernel; the 32 sums
+    take their bits from the universal family (one groupBy on doc_id)
+    and end in the shared :func:`simhash_pairs_from_sums` tail (lazy
+    signature persist, bucket-local band self-join, never all-pairs).
+    The tail's int hamming is widened to the oracle's BIGINT."""
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = d.unionByName(
-        d.select(
-            (F.col("doc_id") + _COPY_OFFSET).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(" zz yy")).alias("text"),
+    pairs = simhash_pairs_from_sums(
+        _simhash_sums(
+            _kr_shingles(_neardup_corpus(d)),
+            lambda b: ((F.col("sh") * _SH_A[b] + _SH_C[b]) % _M31) % 2 == 1,
         )
     )
-    return kr_simhash_pairs(_kr_shingles(corpus))
-
-
-def kr_simhash_pairs(feat: DataFrame) -> DataFrame:
-    """(doc_id, sh: long) KR features → banded 32-bit SimHash pair set
-    (4×8-bit bands, hamming ≤ 3) — the signature tail shared by
-    ``dedup_simhash_polyhash`` (token shingles) and
-    ``mm_simhash_bytes_polyhash`` (byte grams).  Every op is
-    bit-identical in DuckDB (_SH_SUMS_SQL/_SH_SIG_SQL are the SQL
-    twins), so callers' oracles replay it verbatim."""
-    sums = feat.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(
-                    ((F.col("sh") * _SH_A[b] + _SH_C[b]) % _M31) % 2 == 1, 1
-                ).otherwise(-1)
-            ).alias(f"s{b}")
-            for b in range(_SIMHASH_BITS)
-        ]
-    )
-    return kr_simhash_pairs_from_sums(sums)
-
-
-def kr_simhash_pairs_from_sums(
-    sums: DataFrame, eager: bool = False
-) -> DataFrame:
-    """(doc_id, s0..s31) per-bit sign sums → banded pair set — the tail
-    of :func:`kr_simhash_pairs`, exposed so callers that compute the
-    32 sums inside an Arrow kernel (``mm_simhash_bytes_polyhash``: 32
-    vectorized ops over the per-doc gram array, zero shuffle) skip the
-    corpus-×-32 conditional-sum aggregation entirely.
-
-    ``eager`` materializes the signature cache with one count() BEFORE
-    the band self-join builds.  A lazy persist gets RACED by the join's
-    two stages — each computes the uncached subtree concurrently.  For
-    a cheap JVM subtree the race is nearly free (both passes overlap on
-    idle cores: 1.89 s lazy vs 2.26 s eager for dedup_simhash_polyhash
-    at sf0.1 — the extra serialized pass LOSES), so that caller stays
-    lazy; for a Python-bound Arrow-kernel subtree the race doubles the
-    worker-limited kernel work (~8 s vs ~5 s for the mm byte-gram
-    caller), so it passes eager=True."""
-    sig_col = None
-    for b in range(_SIMHASH_BITS):
-        bit = F.when(F.col(f"s{b}") >= 0, F.lit(1 << b).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        sig_col = bit if sig_col is None else sig_col + bit
-    # sigs feeds both sides of the band self-join — without persist the
-    # whole tokenize→fold→window→distinct→32-sum subtree re-derives per
-    # consumer (graph_triangle_count precedent, ~|docs| rows cached).
-    sigs = sums.select("doc_id", sig_col.alias("sig")).persist()
-    if eager:
-        sigs.count()
-    n_bands = _SIMHASH_BITS // _SIMHASH_BAND
-    band_vals = F.array(
-        *[
-            F.shiftright(F.col("sig"), b * _SIMHASH_BAND).bitwiseAND(
-                F.lit((1 << _SIMHASH_BAND) - 1)
-            )
-            for b in range(n_bands)
-        ]
-    )
-    bands = sigs.select(
-        "doc_id", "sig", F.posexplode(band_vals).alias("band", "band_val")
-    )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    hamming = F.bit_count(F.col("a.sig").bitwiseXOR(F.col("b.sig"))).cast("long")
-    # hamming gate before the pair-dedup — see simhash_pairs (the
-    # distinct's exchange carries true pairs, not bucket candidates).
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            hamming.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= 3)
-        .distinct()
-    )
+    return pairs.withColumn("hamming", F.col("hamming").cast("long"))
 
 
 _SETSIM_T10 = 8  # Jaccard threshold in tenths (0.8)
@@ -885,18 +870,9 @@ def dedup_setsim_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     a shuffle join keyed on the pair ids when it is not, so no stage
     ever forces a corpus-correlated broadcast."""
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = d.unionByName(
-        d.select(
-            (F.col("doc_id") + _COPY_OFFSET).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(" zz yy")).alias("text"),
-        )
-    )
-    # Arrow-kernel shingles (r18): this caller persists sh and runs two
-    # windows + three joins over it — the kernel builds the cached frame
-    # in one Python pass with the per-doc distinct already applied
-    # (interleaved A/B mins 5.8 → 3.1 s; exact-equal by the pinned
-    # kernel≡JVM test, oracle untouched).
-    sh = _kr_shingles_arrow(corpus).persist()
+    # sh feeds two windows and three joins — persist the kernel's
+    # already-distinct rows.
+    sh = _kr_shingles(_neardup_corpus(d)).persist()
 
     # df as a window count over the sh partitioning — measured faster
     # than the groupBy+join form (2.0 vs 2.4 s to candidates at sf0.1):
@@ -996,27 +972,7 @@ def dedup_setsim_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_common",
         "n_a",
         "n_b",
-        F.expr("n_common * 1000000 div (n_a + n_b - n_common)")
-        .cast("long")
-        .alias("jac_e6"),
-    )
-
-
-# MinHash universal-hash family over KR shingles — same (a, b)
-# construction as minhash_near_pairs' local family (one xxhash64-free
-# chain end-to-end so DuckDB can replay it); module-level because the
-# oracle SQL is built at decorator time.
-_MH_A = [(2654435761 * (2 * i + 1)) % _M31 or 1 for i in range(_N_HASHES)]
-_MH_B = [(40503 * i * i + 987654321 + i) % _M31 for i in range(_N_HASHES)]
-
-
-def _mh_band_fold_sql(b: int) -> str:
-    """Base-131 mod-M31 fold of band b's 4 consecutive min-hashes —
-    the integer band key both engines compute bit-identically."""
-    i0, i1, i2, i3 = (b * _BAND_SIZE + j for j in range(4))
-    return (
-        f"((((m{i0} * 131 + m{i1}) % {_M31}) * 131 + m{i2}) % {_M31}"
-        f" * 131 + m{i3}) % {_M31}"
+        _jac_e6(),
     )
 
 
@@ -1026,22 +982,8 @@ _MH_MINS_SQL = ",\n           ".join(
 )
 _MH_BANDS_SQL = "\n        UNION ALL\n        ".join(
     f"SELECT doc_id, {b} AS band, {_mh_band_fold_sql(b)} AS band_key FROM mins"
-    for b in range(_N_HASHES // _BAND_SIZE)
+    for b in range(_N_BANDS)
 )
-
-
-def _mh_band_fold(b: int):
-    """Spark twin of :func:`_mh_band_fold_sql` over the m{i} columns."""
-    i0, i1, i2, i3 = (b * _BAND_SIZE + j for j in range(4))
-    return (
-        (
-            ((F.col(f"m{i0}") * 131 + F.col(f"m{i1}")) % _M31) * 131
-            + F.col(f"m{i2}")
-        )
-        % _M31
-        * 131
-        + F.col(f"m{i3}")
-    ) % _M31
 
 
 # KR MinHash pair CTEs — consume an `sh` CTE of DISTINCT (doc_id, sh)
@@ -1080,112 +1022,25 @@ _KR_MH_PAIRS_CTES = f"""mins AS (
     )"""
 
 
-def kr_minhash_near_pairs(corpus: DataFrame, arrow: bool = False) -> DataFrame:
+def kr_minhash_near_pairs(corpus: DataFrame) -> DataFrame:
     """Exact-Jaccard ≥ 0.5 near-dup pairs over a (doc_id, text) corpus
     via the DuckDB-replayable Karp-Rabin MinHash+LSH chain — the
     hash-verifiable twin of :func:`minhash_near_pairs` (SQL twin:
     :data:`_KR_MH_PAIRS_CTES` over an `sh` CTE).  Returns (doc_a,
-    doc_b, n_common, n_a, n_b, jac_e6).
-
-    ``arrow`` selects the Arrow-kernel shingle builder — per-caller
-    measured decision (the :func:`_kr_shingles_arrow` table):
-    pipeline_corpus_clean_polyhash passes True (its corpus arg is a
-    persisted post-dedup frame and the kernel won every A/B round);
-    dedup_minhash_polyhash keeps the JVM form (direct-groupBy shape,
-    JVM won the minima both orders)."""
-    sh = (_kr_shingles_arrow if arrow else _kr_shingles)(corpus)
-    return kr_pairs_from_sh(sh)
+    doc_b, n_common, n_a, n_b, jac_e6)."""
+    return kr_pairs_from_sh(_kr_shingles(corpus))
 
 
 def kr_pairs_from_sh(sh: DataFrame, eager: bool = False) -> DataFrame:
-    """The minhash → band → bucket-join → exact-verify tail of
-    :func:`kr_minhash_near_pairs`, over ANY distinct (doc_id, sh)
-    shingle-hash frame (SQL twin: :data:`_KR_MH_PAIRS_CTES` over an
-    `sh` CTE) — factored out so keys that derive their shingle stream
+    """The hash-verified MinHash chain over ANY distinct (doc_id, sh)
+    KR shingle-hash frame (SQL twin: :data:`_KR_MH_PAIRS_CTES` over an
+    `sh` CTE): :func:`_mh_pairs` with the KR hash itself as h and the
+    integer :func:`_mh_band_fold` band keys, projected to (doc_a, doc_b,
+    n_common, n_a, n_b, jac_e6).  Keys that derive their shingle stream
     differently (e.g. the lexicon-normalized cross-lingual key) reuse
-    the identical pair chain.  Shuffle discipline is the
-    minhash_near_pairs shape: persisted shingle diamond, columnar
-    16-min reduce, bucket-local band self-join, unhinted
-    candidate-verify joins (AQE size-selects).
-
-    ``eager`` is the r12 lazy-persist-race dial
-    (kr_simhash_pairs_from_sums precedent): the band self-join races a
-    LAZY sh persist, computing the shingle subtree 2×.  Measured at
-    sf0.1 (cold cache, min of 2): crosslingual 5.02 s lazy → 4.31 s
-    eager (its sh subtree carries the lexicon normalize + window);
-    minhash_polyhash 2.05 s lazy → 2.43 s eager (cheap subtree — the
-    extra driver job outweighs the race).  Default lazy; callers with
-    an expensive shingle stream pass eager=True."""
-    sh = sh.persist()
-    if eager:
-        sh.count()
-    mins = sh.groupBy("doc_id").agg(
-        *[
-            F.min((F.col("sh") * F.lit(_MH_A[i]) + F.lit(_MH_B[i])) % F.lit(_M31))
-            .alias(f"m{i}")
-            for i in range(_N_HASHES)
-        ]
-    )
-
-    bands = mins.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[_mh_band_fold(b) for b in range(_N_HASHES // _BAND_SIZE)])
-        ).alias("band", "band_key"),
-    )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    sh_a = sh.withColumnRenamed("doc_id", "doc_a")
-    sh_b = sh.select(
-        F.col("doc_id").alias("b_id"), F.col("sh").alias("sh_b")
-    )
-    # Unhinted cand join — same Heaps'-law reasoning as the xxhash twin
-    # above: pair volume is corpus-proportional, so size selection is
-    # AQE's call, not a hard hint (r11 broadcast-audit policy).
-    inter = (
-        sh_a.join(cand, "doc_a")
-        .join(
-            sh_b,
-            (F.col("doc_b") == F.col("b_id")) & (F.col("sh") == F.col("sh_b")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    return (
-        inter.join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a")),
-            "doc_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b")),
-            "doc_b",
-        )
-        .filter(
-            F.col("n_common") * 2 >= F.col("n_a") + F.col("n_b") - F.col("n_common")
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_common",
-            "n_a",
-            "n_b",
-            F.expr("n_common * 1000000 div (n_a + n_b - n_common)")
-            .cast("long")
-            .alias("jac_e6"),
-        )
+    the identical pair chain; ``eager`` as in :func:`_mh_pairs`."""
+    return _mh_pairs(sh, F.col("sh"), _mh_band_fold, eager).select(
+        "doc_a", "doc_b", "n_common", "n_a", "n_b", _jac_e6()
     )
 
 
@@ -1223,13 +1078,7 @@ def dedup_minhash_polyhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh < 2³¹ and a_i < M31 keep a_i·sh + b_i < 2⁶²; band folds stay
     < 2³⁸ between reductions."""
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = d.unionByName(
-        d.select(
-            (F.col("doc_id") + _COPY_OFFSET).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(" zz yy")).alias("text"),
-        )
-    )
-    return kr_minhash_near_pairs(corpus)
+    return kr_minhash_near_pairs(_neardup_corpus(d))
 
 
 # Incremental batch: near-copies (‰3=0), exact copies (‰3=1), and NOVEL
@@ -1329,19 +1178,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sh = _kr_shingles(corpus).persist()
-    mins = sh.groupBy("doc_id").agg(
-        *[
-            F.min((F.col("sh") * F.lit(_MH_A[i]) + F.lit(_MH_B[i])) % F.lit(_M31))
-            .alias(f"m{i}")
-            for i in range(_N_HASHES)
-        ]
-    )
-    bands = mins.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[_mh_band_fold(b) for b in range(_N_HASHES // _BAND_SIZE)])
-        ).alias("band", "band_key"),
-    )
+    bands = _mh_bands(_mh_mins(sh, F.col("sh")), _mh_band_fold)
     idx_bands = bands.filter(F.col("doc_id") < _COPY_OFFSET).select(
         F.col("doc_id").alias("index_id"), "band", "band_key"
     )
@@ -1353,46 +1190,16 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("batch_id", "index_id")
         .distinct()
     )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    sh_b = sh.withColumnRenamed("doc_id", "batch_id")
-    sh_a = sh.select(
-        F.col("doc_id").alias("a_id"), F.col("sh").alias("sh_a")
-    )
-    inter = (
-        sh_b.join(cand, "batch_id")
-        .join(
-            sh_a,
-            (F.col("index_id") == F.col("a_id")) & (F.col("sh") == F.col("sh_a")),
-        )
-        .groupBy("batch_id", "index_id")
-        .agg(F.count("*").alias("n_common"))
-    )
     return (
-        inter.join(
-            sizes.select(
-                F.col("doc_id").alias("batch_id"), F.col("n").alias("n_batch")
-            ),
-            "batch_id",
-        )
-        .join(
-            sizes.select(
-                F.col("doc_id").alias("index_id"), F.col("n").alias("n_index")
-            ),
-            "index_id",
-        )
-        .filter(
-            F.col("n_common") * 2
-            >= F.col("n_batch") + F.col("n_index") - F.col("n_common")
-        )
+        _mh_verify(sh, cand, "batch_id", "index_id")
+        .filter(_jaccard_ge_half())
         .select(
             "batch_id",
             "index_id",
             "n_common",
-            "n_batch",
-            "n_index",
-            F.expr("n_common * 1000000 div (n_batch + n_index - n_common)")
-            .cast("long")
-            .alias("jac_e6"),
+            F.col("n_a").alias("n_batch"),
+            F.col("n_b").alias("n_index"),
+            _jac_e6(),
         )
     )
 
@@ -1541,16 +1348,6 @@ def dedup_cosine_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CC_MAX_ITERS = 16
-
-
-def _neardup_corpus(d: DataFrame) -> DataFrame:
-    """documents ∪ planted exact copies (doc_id+offset, text + ' zz yy')."""
-    return d.unionByName(
-        d.select(
-            (F.col("doc_id") + _COPY_OFFSET).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(" zz yy")).alias("text"),
-        )
-    )
 
 
 def _neardup_edges(d: DataFrame) -> DataFrame:
@@ -2558,45 +2355,14 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh — lazy is the measured-cheap choice (kr_pairs_from_sh default,
     minhash_polyhash precedent)."""
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = d.unionByName(
-        d.select(
-            (F.col("doc_id") + _COPY_OFFSET).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(" zz yy")).alias("text"),
-        )
-    )
-    sh = _kr_shingles(corpus).persist()
-    mins = sh.groupBy("doc_id").agg(
-        *[
-            F.min((F.col("sh") * F.lit(_MH_A[i]) + F.lit(_MH_B[i])) % F.lit(_M31))
-            .alias(f"m{i}")
-            for i in range(_N_HASHES)
-        ]
-    ).persist()
+    sh = _kr_shingles(_neardup_corpus(d)).persist()
+    mins = _mh_mins(sh, F.col("sh")).persist()
     # Eager: mins feeds the band self-join AND both agreement sides (3
     # racing consumers through one cache) — measured warm mins-of-3 at
     # sf0.1: lazy 3.72 vs eager 3.43 s (sh stays lazy: eager-both 3.27
     # was inside the same noise band, one extra job not justified).
     mins.count()
-    bands = mins.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[_mh_band_fold(b) for b in range(_N_HASHES // _BAND_SIZE)])
-        ).alias("band", "band_key"),
-    )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
+    cand = _mh_candidates(_mh_bands(mins, _mh_band_fold))
     ma = mins.select(
         F.col("doc_id").alias("a_id"),
         *[F.col(f"m{i}").alias(f"ma{i}") for i in range(_N_HASHES)],
@@ -2614,25 +2380,10 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(mb, cand.doc_b == mb.b_id)
         .select("doc_a", "doc_b", n_agree.alias("n_agree"))
     )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    sh_a = sh.withColumnRenamed("doc_id", "doc_a")
-    sh_b = sh.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("sh_b"))
-    inter = (
-        sh_a.join(cand, "doc_a")
-        .join(
-            sh_b,
-            (F.col("doc_b") == F.col("b_id")) & (F.col("sh") == F.col("sh_b")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    sz_a = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
-    sz_b = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
     jac_e4 = F.expr("(10000 * n_common) div (n_a + n_b - n_common)")
     est_e4 = (F.col("n_agree") * 625).cast("long")
     return (
-        inter.join(sz_a, "doc_a")
-        .join(sz_b, "doc_b")
+        _mh_verify(sh, cand)
         .join(agree, ["doc_a", "doc_b"])
         .select(
             "doc_a",

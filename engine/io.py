@@ -20,7 +20,10 @@ on the driver.
 
 from __future__ import annotations
 
+import atexit
+import glob
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -229,13 +232,24 @@ def source_range_synthetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_SCRATCH_ROOT = os.path.join(tempfile.gettempdir(), "spark_graft_io")
+
+
 def _scratch_dir(name: str) -> str:
     # The name carries the PID, as streaming checkpoints do: two
     # concurrent sessions (bench + pytest) would otherwise overwrite
     # each other's round-trip files mid-key.
-    d = os.path.join(tempfile.gettempdir(), "spark_graft_io", f"{name}_{os.getpid()}")
-    os.makedirs(os.path.dirname(d), exist_ok=True)
+    d = os.path.join(_SCRATCH_ROOT, f"{name}_{os.getpid()}")
+    os.makedirs(_SCRATCH_ROOT, exist_ok=True)
     return d
+
+
+@atexit.register
+def _remove_scratch_dirs() -> None:
+    # Each process removes its own PID-named dirs when its interpreter
+    # exits; a forked child has another PID and leaves its parent's be.
+    for d in glob.glob(os.path.join(_SCRATCH_ROOT, f"*_{os.getpid()}")):
+        shutil.rmtree(d, ignore_errors=True)
 
 
 @query(
@@ -792,7 +806,6 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant (BASELINE.md r7 note), not per-row work; the write/agg
     bodies are sub-second.  The spin-up is paid once per query, so at
     100 TB it amortizes to noise."""
-    import shutil as _shutil
 
     from pyspark import TaskContext
     from pyspark.sql.datasource import (
@@ -855,7 +868,7 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     dst = _scratch_dir("pyds_sink")
     if os.path.exists(dst):
-        _shutil.rmtree(dst)
+        shutil.rmtree(dst)
     os.makedirs(dst, exist_ok=True)
 
     sample = (
@@ -918,15 +931,13 @@ def sink_idempotent_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     writer).  At 1000 executors the same shape fans out to 1000
     independent idempotent writers with no coordination — the commit
     protocol IS the determinism."""
-    import glob as _glob
-    import shutil as _shutil
 
     import pandas as pd
     from pyspark import TaskContext
 
     dst = _scratch_dir("idempotent_sink")
     if os.path.exists(dst):
-        _shutil.rmtree(dst)
+        shutil.rmtree(dst)
     os.makedirs(dst, exist_ok=True)
 
     upserts = (
@@ -968,7 +979,7 @@ def sink_idempotent_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("writes"),
         F.max("price_cents").alias("price_cents"),
     )
-    assert _glob.glob(os.path.join(dst, "*.tmp")) == []
+    assert glob.glob(os.path.join(dst, "*.tmp")) == []
     return per_key.groupBy("o_orderstatus").agg(
         F.count("*").alias("n_keys"),
         F.sum("price_cents").alias("sum_price_cents"),
@@ -1141,9 +1152,7 @@ def scan_files_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     join against a listing); grouping by a value parsed from it is a
     plain map-side-combinable aggregate."""
     configure(spark)
-    import glob as _glob
     import os
-    import shutil
 
     def build(dst: str) -> None:
         o = load(spark, sf_dir, "orders")
@@ -1152,7 +1161,7 @@ def scan_files_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
             o.filter(F.col("o_orderkey") % 4 == i).coalesce(1).write.mode(
                 "overwrite"
             ).parquet(tmp)
-            part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
+            part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
             shutil.move(part, os.path.join(dst, f"shard_k{i}.parquet"))
             shutil.rmtree(tmp)
 
@@ -1441,7 +1450,6 @@ def sink_managed_table_ctas(spark: SparkSession, sf_dir: str) -> DataFrame:
     path sinks (here overwrite-idempotent); at 100 TB it would add
     partitioning/bucketing clauses — exercised by the dedicated
     bucketed/partitioned sink keys."""
-    import shutil
     from urllib.parse import urlparse
 
     o = load(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 3 == 0)
@@ -1580,7 +1588,6 @@ def sink_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Embedded Derby is single-JVM — at cluster scale the same code
     points at a networked RDBMS; the partitioned-read shape and
     pushdown semantics are identical."""
-    import shutil
 
     sample = load(spark, sf_dir, "lineitem").filter(
         F.col("l_orderkey") % 11 == 0
@@ -1667,7 +1674,6 @@ def _stage_glob_orders(spark: SparkSession, sf_dir: str) -> str:
                         os.path.join(sub, "_tmp", f),
                         os.path.join(sub, f"orders_p{tag}.parquet"),
                     )
-            import shutil
 
             shutil.rmtree(os.path.join(sub, "_tmp"), ignore_errors=True)
 
@@ -1816,7 +1822,6 @@ def sink_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     it is what makes CBO join reordering / broadcast decisions real on
     a 100 TB warehouse — stats-less catalogs force rule-only planning.
     The stats fetch is O(1) catalog metadata."""
-    import shutil
     from urllib.parse import urlparse
 
     li = load(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 5 == 0)
@@ -1893,9 +1898,7 @@ def source_delta_log_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint via staged_build_once (r13 ADVICE: the per-invocation
     rmtree+rebuild charged every run 3 parquet writes and could race a
     concurrent reader mid-replay)."""
-    import glob
     import json as _json
-    import shutil
 
     from pyspark.sql import Window as W
 

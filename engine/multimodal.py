@@ -246,7 +246,7 @@ def mm_simhash_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
                     f" i -> xxhash64(substring(payload, i, {_BYTE_GRAM})))"
                 )
             )
-        ).alias("token"),
+        ).alias("sh"),
     )
     from engine.dedup import simhash_pairs
 
@@ -334,7 +334,7 @@ def mm_simhash_bytes_polyhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     range() there).
 
     Signature tail is the shared
-    :func:`engine.dedup.kr_simhash_pairs_from_sums` (bucket-local band
+    :func:`engine.dedup.simhash_pairs_from_sums` (bucket-local band
     join, hamming gate before distinct).  Recall on the planted
     +' zz yy' copies is pinned as a FLOOR in tests (fixed hash family,
     KR-LSH discipline)."""
@@ -346,7 +346,7 @@ def mm_simhash_bytes_polyhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         _SH_A,
         _SH_C,
         _SIMHASH_BITS,
-        kr_simhash_pairs_from_sums,
+        simhash_pairs_from_sums,
     )
 
     m = _media(spark, sf_dir).select("media_id", "payload")
@@ -397,10 +397,10 @@ def mm_simhash_bytes_polyhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
         )
     )
-    return kr_simhash_pairs_from_sums(sums, eager=True).select(
+    return simhash_pairs_from_sums(sums, eager=True).select(
         F.col("doc_a").alias("media_a"),
         F.col("doc_b").alias("media_b"),
-        "hamming",
+        F.col("hamming").cast("long").alias("hamming"),
     )
 
 

@@ -4173,7 +4173,7 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized EAGERLY before feeding both sides of the self-join —
     a lazy persist diamond would race both join stages into computing
     the quadratic scoring subtree twice (the r12
-    kr_simhash_pairs_from_sums lesson, measured ~2x there).
+    simhash_pairs_from_sums lesson, measured ~2x there).
 
     Output: pairs with ≥2 common neighbors (mirrored bound), their
     common count, degrees, and jaccard_e4."""

@@ -1067,6 +1067,30 @@ def test_pipeline_corpus_clean_polyhash_stage_attribution(spark):
     assert kept >= 0.75 * len(originals), f"only {kept} originals kept"
 
 
+def _kr_reference(text):
+    """Python evaluation of the published KR shingle definition: lower
+    + split on single spaces dropping empties (engine.text._tokens),
+    per-token char fold (h*31+ord(c)) mod p40 reduced mod M31, base-131
+    3-token combine mod M31, distinct.  NULL text → no shingles."""
+    from engine.dedup import _FP_MOD, _M31
+
+    if text is None:
+        return set()
+    norm = [t for t in text.lower().split(" ") if t]
+
+    def fold(tok):
+        h = 0
+        for c in tok:
+            h = (h * 31 + ord(c)) % _FP_MOD
+        return h % _M31
+
+    th = [fold(t) for t in norm]
+    return {
+        (((th[i] * 131 + th[i + 1]) % _M31) * 131 + th[i + 2]) % _M31
+        for i in range(len(th) - 2)
+    }
+
+
 @_hyp
 @given(
     toks=st.lists(
@@ -1082,65 +1106,93 @@ def test_pipeline_corpus_clean_polyhash_stage_attribution(spark):
     )
 )
 def test_kr_shingles_match_python_reference(spark, toks):
-    """The Karp-Rabin shingle chain (engine.dedup._kr_shingles) must
-    equal a direct Python evaluation of its published definition —
-    per-token char fold (h*31+ord(c)) mod p40, reduced mod M31, then
-    base-131 3-token combine mod M31, distinct.  Five hash-verified
-    keys (simhash/minhash/setsim/incremental/pipeline polyhash) and
-    their DuckDB twins all assume exactly these constants; a silent
-    drift in either engine implementation breaks them as a family."""
-    from engine.dedup import _FP_MOD, _M31, _kr_shingles
+    """The Karp-Rabin shingle kernel (engine.dedup._kr_shingles) must
+    equal a direct Python evaluation of its published definition.  Six
+    hash-verified keys (simhash/minhash/setsim/incremental/calibration/
+    pipeline polyhash) and their DuckDB twins all assume exactly these
+    constants; a silent drift in either engine implementation breaks
+    them as a family."""
+    from engine.dedup import _kr_shingles
 
     text = " ".join(toks)
-    # mirror engine.text._tokens: lower + split on single spaces,
-    # dropping empties (generated tokens are non-empty, no spaces)
-    norm = [t.lower() for t in text.split(" ") if t]
-
-    def fold(tok):
-        h = 0
-        for c in tok:
-            h = (h * 31 + ord(c)) % _FP_MOD
-        return h % _M31
-
-    th = [fold(t) for t in norm]
-    expected = {
-        (((th[i] * 131 + th[i + 1]) % _M31) * 131 + th[i + 2]) % _M31
-        for i in range(len(th) - 2)
-    }
     corpus = spark.createDataFrame([(1, text)], "doc_id long, text string")
     got = {r.sh for r in _kr_shingles(corpus).collect()}
+    expected = _kr_reference(text)
     assert got == expected, f"KR drift: {got ^ expected}"
 
 
-def test_kr_shingles_arrow_kernel_equals_jvm_twin(spark):
-    """r18: setsim and corpus_clean_polyhash build shingles via the
-    Arrow/numpy kernel _kr_shingles_arrow (guide §4.2, caller-selected
-    by measurement); it must be EXACT-EQUAL to the JVM chain
-    _kr_shingles on the full planted corpus — the five consumer keys'
-    DuckDB oracles replay the JVM-form arithmetic, so any kernel drift
-    (tokenization, fold, combine, distinct) breaks the family.
-    Includes a NULL-text row (posexplode-of-null parity) and <3-token
-    rows (no shingles)."""
-    from engine.dedup import _COPY_OFFSET, _kr_shingles, _kr_shingles_arrow
+def test_kr_shingles_planted_corpus_and_edge_rows_match_python_reference(spark):
+    """The kernel over the full planted corpus plus the rows a batch
+    kernel gets wrong first: NULL text (no rows), fewer than 3 tokens
+    (no rows), and consecutive / leading / trailing spaces (empty
+    segments skipped, as `_tokens` drops them)."""
+    from engine.dedup import _kr_shingles, _neardup_corpus
 
     d = load(spark, SF_DIR, "documents").select("doc_id", "text")
-    corpus = d.unionByName(
-        d.select(
-            (F.col("doc_id") + _COPY_OFFSET).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(" zz yy")).alias("text"),
-        )
-    ).unionByName(
-        spark.createDataFrame(
-            [(900_001, None), (900_002, "one two"), (900_003, "  a  b ")],
-            "doc_id long, text string",
-        )
+    edge = [
+        (900_001, None),
+        (900_002, "one two"),
+        (900_003, "  a  b "),
+        (900_004, "  Aa   bb cc  dd   "),
+        (900_005, ""),
+    ]
+    corpus = _neardup_corpus(d).unionByName(
+        spark.createDataFrame(edge, "doc_id long, text string")
     )
-    kern = _kr_shingles_arrow(corpus)
-    jvm = _kr_shingles(corpus)
-    assert kern.exceptAll(jvm).count() == 0
-    assert jvm.exceptAll(kern).count() == 0
-    n = kern.count()
-    assert n == jvm.count() and n > 0
+    texts = {r.doc_id: r.text for r in corpus.collect()}
+    expected = {(i, sh) for i, t in texts.items() for sh in _kr_reference(t)}
+    rows = _kr_shingles(corpus).collect()
+    got = {(r.doc_id, r.sh) for r in rows}
+    assert len(rows) == len(got), "kernel emitted a duplicate (doc_id, sh)"
+    assert got == expected, f"KR drift on {len(got ^ expected)} rows"
+    assert {i for i, _ in got} >= {900_004} and len(texts) > 1000
+    assert not {i for i, _ in got} & {900_001, 900_002, 900_003, 900_005}
+
+
+def test_minhash_gate_keeps_exact_half_and_drops_just_under(spark):
+    """Both MinHash families gate at exact J ≥ 0.5 on integer counts.
+    A hand-built shingle frame holds a pair at J = 50/100 and one at
+    49/100.  Every non-shared shingle hashes above the shared set's
+    minimum under all 16 family members, so each pair agrees on all 16
+    mins and is an LSH candidate under both band-key folds — only the
+    verify gate can drop the 49/100 pair."""
+    from engine.dedup import (
+        _M31,
+        _MH_A,
+        _MH_B,
+        _mh_band_fold,
+        _mh_bands,
+        _mh_candidates,
+        _mh_mins,
+        _xx_band_key,
+        kr_pairs_from_sh,
+        xx_pairs_from_sh,
+    )
+
+    def h(i, x):
+        return (x * _MH_A[i] + _MH_B[i]) % _M31
+
+    def pair(common, n_a_only, n_b_only, start):
+        mins = [min(h(i, x) for x in common) for i in range(16)]
+        extra = (x for x in range(start, start + 10_000)
+                 if all(h(i, x) > mins[i] for i in range(16)))
+        a_only = [next(extra) for _ in range(n_a_only)]
+        b_only = [next(extra) for _ in range(n_b_only)]
+        return common + a_only, common + b_only
+
+    a1, b1 = pair(list(range(1_000, 1_050)), 25, 25, 10_000)  # 50 / 100
+    a2, b2 = pair(list(range(2_000, 2_049)), 25, 26, 30_000)  # 49 / 100
+    rows = [(doc, x) for doc, xs in ((1, a1), (2, b1), (3, a2), (4, b2))
+            for x in xs]
+    sh = spark.createDataFrame(rows, "doc_id long, sh long")
+
+    for key in (_mh_band_fold, _xx_band_key):
+        cand = _mh_candidates(_mh_bands(_mh_mins(sh, F.col("sh")), key))
+        assert {(r.doc_a, r.doc_b) for r in cand.collect()} == {(1, 2), (3, 4)}
+    xx = [tuple(r) for r in xx_pairs_from_sh(sh).collect()]
+    assert xx == [(1, 2, 0.5)]
+    kr = [tuple(r) for r in kr_pairs_from_sh(sh).collect()]
+    assert kr == [(1, 2, 50, 75, 75, 500_000)]
 
 
 def test_decontaminate_spans_recover_planted_slices(spark):
@@ -2391,3 +2443,27 @@ def test_scratch_dir_differs_between_processes():
     dirs = [p.communicate(timeout=300)[0].strip() for p in procs]
     assert [p.returncode for p in procs] == [0, 0]
     assert len({*dirs, _scratch_dir("x")}) == 3
+
+
+def test_scratch_dir_removed_at_exit():
+    # A finished process leaves no PID-named scratch dir behind; the
+    # child checks its own dir exists before it exits.
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import os; from engine.io import _scratch_dir\n"
+        "d = _scratch_dir('x'); os.makedirs(os.path.join(d, 'sub'))\n"
+        "open(os.path.join(d, 'sub', 'part-0'), 'w').write('1')\n"
+        "assert os.path.isfile(os.path.join(d, 'sub', 'part-0'))\n"
+        "print(d)"
+    )
+    p = subprocess.run([sys.executable, "-c", code], cwd=root,
+                       capture_output=True, text=True, timeout=300)
+    assert p.returncode == 0, p.stderr
+    d = p.stdout.strip()
+    assert os.path.basename(d).startswith("x_")
+    assert os.path.isdir(os.path.dirname(d))
+    assert not os.path.exists(d)
